@@ -3,28 +3,23 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned-snapshot store shared by the persistent index families
-  * (fingerprint / SRP / IVF) — [[PortraitOps.profileUpsert]]'s
-  * manifest-flip protocol generalized from bucket→version maps to
-  * table→segment-list maps, so that APPEND stays cheap (a new version
-  * adds segment directories; nothing old is rewritten) while COMPACT
-  * and REBUILD swap whole tables atomically.
+  * (fingerprint / SRP / IVF / ...) and the profile store: one
+  * table→segment-list map per version, so that APPEND stays cheap (a
+  * new version adds segment directories; nothing old is rewritten)
+  * while COMPACT and REBUILD swap whole tables atomically.
   *
-  * DELIBERATELY a sibling of the profile store, not its replacement:
-  * the two protocols share the claim/TOCTOU/publish shape but differ in
-  * their unit of ownership — a profile BUCKET lives in exactly one
-  * version (an upsert re-points untouched buckets; reads never union)
-  * and the manifest carries the nBuckets layout gate, while an index
-  * TABLE is a list of append-only segments. Folding one into the other
-  * would force the weaker model on both, and the profile manifest
-  * format is already persisted on disk by earlier releases — any
-  * protocol fix must be considered for BOTH files
-  * (PortraitOps.profileUpsert region and here). Self-contained on any
-  * Hadoop filesystem with atomic exclusive-create and `rename` (HDFS,
-  * ABFS; on `file:` the claim goes through NIO O_EXCL because Hadoop's
-  * LocalFileSystem fakes exclusive create as check-then-act — see
-  * [[exclusiveCreate]]); a plain object store without atomic
-  * exclusive-create needs an external writer lock, exactly
-  * profileUpsert's caveat.
+  * The profile store ([[PortraitOps.profileUpsert]]) is a client like
+  * any index family: each live hash bucket is a table `bucket=<b>`
+  * whose single segment is the version dir that owns the bucket (an
+  * upsert re-points untouched buckets; reads never union), and the
+  * bucket layout rides as the `n_buckets` prop. This module alone owns
+  * the manifest format and the commit protocol, so a protocol fix lands
+  * once for every client. Self-contained on any Hadoop filesystem with
+  * atomic exclusive-create and `rename` (HDFS, ABFS; on `file:` the
+  * claim goes through NIO O_EXCL because Hadoop's LocalFileSystem fakes
+  * exclusive create as check-then-act — see [[exclusiveCreate]]); a
+  * plain object store without atomic exclusive-create needs an external
+  * writer lock.
   *
   * Layout under an index directory:
   *  - `vNNNNN/<table>/...parquet` — immutable segment directories;
@@ -40,10 +35,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A commit: (1) resolves the latest manifest, (2) CLAIMS version
   * N+1 by exclusive create — a second concurrent writer fails LOUDLY
   * here ([[ConcurrentIndexWriteException]]), before any Spark job
-  * runs — (3) re-verifies the chain still ends at N (the
-  * profileUpsert TOCTOU re-check: a racer can claim, commit AND
-  * release between our resolve and our claim), (4) runs the writer's
-  * data jobs into the immutable `vNNNNN/` dir, and (5) PUBLISHES by
+  * runs — (3) re-verifies the chain still ends at N (the TOCTOU
+  * re-check: a racer can claim, commit AND release between our resolve
+  * and our claim), (4) runs the writer's data jobs into the immutable
+  * `vNNNNN/` dir, and (5) PUBLISHES by
   * renaming the manifest into place — one atomic metadata operation.
   * A reader resolving concurrently sees the old snapshot or the new
   * one, never a mix: segment dirs land fully before the manifest
@@ -51,7 +46,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * resolved its snapshot before an append/compact published keeps
   * reading complete, consistent tables to the end of its job.
   *
-  * Failure story, inherited from profileUpsert: a writer that FAILS
+  * Failure story: a writer that FAILS
   * before publishing deletes its partial data dir and releases its
   * claim on the way out; a writer that CRASHES leaves `vNNNNN.CLAIM`
   * residue, and the next writer fails loudly naming the file (delete
@@ -130,8 +125,11 @@ private[graft] object IndexStore {
     * on a fresh dir) and the claimed version-dir name; it runs the
     * data jobs into `indexDir/<vname>/<table>` and returns the NEW
     * complete (tables, props) to record. Claim precedes all data
-    * work; publish is one manifest rename. */
-  def commit(spark: SparkSession, indexDir: String, op: String)(
+    * work; publish is one manifest rename. A commit that records no
+    * table fails unless `allowEmpty` (a profile table whose every
+    * bucket was deleted is an empty snapshot; an index never is). */
+  def commit(spark: SparkSession, indexDir: String, op: String,
+      allowEmpty: Boolean = false)(
       write: (Option[Snapshot], String) =>
         (Map[String, Seq[String]], Map[String, String])): Snapshot = {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
@@ -153,9 +151,9 @@ private[graft] object IndexStore {
     var published = false
     var wroteData = false
     try {
-      // TOCTOU re-check (profileUpsert's): a racer may have claimed,
-      // COMMITTED and released this very version between our resolve
-      // and our claim create — verify the chain still ends at next-1.
+      // TOCTOU re-check: a racer may have claimed, COMMITTED and
+      // released this very version between our resolve and our claim
+      // create — verify the chain still ends at next-1.
       if (resolve(spark, indexDir).map(_.version).getOrElse(0) != next - 1)
         throw new ConcurrentIndexWriteException(
           s"$op: version $vname of index $indexDir was published by a " +
@@ -168,7 +166,7 @@ private[graft] object IndexStore {
       fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$vname"), true)
       wroteData = true
       val (tables, props) = write(base, vname)
-      require(tables.nonEmpty, s"$op: commit records no tables")
+      require(allowEmpty || tables.nonEmpty, s"$op: commit records no tables")
       props.foreach { case (k, v) =>
         require(k.nonEmpty && v.nonEmpty && !s"$k$v".exists(_.isWhitespace),
           s"$op: manifest props must be non-empty and whitespace-free " +
@@ -305,10 +303,10 @@ private[graft] object IndexStore {
     * NIO's `Files.createFile` — true O_EXCL, throws
     * FileAlreadyExistsException (an IOException, so the caller's loud
     * claim-failure path is unchanged). HDFS/ABFS create IS atomic at the
-    * namenode and keeps the plain Hadoop call. Shared with
-    * [[PortraitOps.profileUpsert]], whose claim gate had the same
-    * local-fs hole. */
-  private[api] def exclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
+    * namenode and keeps the plain Hadoop call. Every writer on this
+    * store — index families and the profile store alike — claims
+    * through [[commit]], so this is the one claim path. */
+  private def exclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Unit =
     if (fs.getScheme == "file") {
       val local = java.nio.file.Paths.get(p.toUri.getPath)

@@ -317,60 +317,48 @@ object PortraitOps {
       .orderBy(keyCol)
 
   /** Day-over-day profile upsert — the WRITE half of the BaseModel cycle,
-    * committed through a VERSIONED-SNAPSHOT protocol (Delta/Iceberg-style
-    * manifest flip, self-contained on any Hadoop filesystem with atomic
-    * exclusive-create and `rename` — HDFS, ABFS; on `file:` the claim
-    * uses NIO O_EXCL because Hadoop's LocalFileSystem fakes exclusive
-    * create as check-then-act ([[IndexStore.exclusiveCreate]]). A plain
-    * object store without atomic exclusive-create (s3a) cannot enforce
-    * the claim gate by itself: serialize writers there with an external
-    * lock or an S3-committer-style layer):
+    * committed as one [[IndexStore]] version (Delta/Iceberg-style
+    * manifest flip: claim → TOCTOU re-check → data jobs → publish; the
+    * store's header names the filesystems it is self-contained on — a
+    * plain object store without atomic exclusive-create (s3a) needs an
+    * external writer lock or an S3-committer-style layer):
     *
     * Layout under `tableDir`:
     *  - `vNNNNN/bucket=<b>/...parquet` — immutable snapshot directories;
     *    version N's dir holds ONLY the buckets that upsert N rewrote.
-    *  - `_manifests/vNNNNN.manifest` — the commit record: one
-    *    `bucket → version-dir` line per live bucket. The LATEST manifest
-    *    IS the table; a bucket untouched by an upsert is re-POINTED at
-    *    the older version dir that already holds it, never rewritten.
-    *  - `_manifests/vNNNNN.CLAIM` — the writer's exclusive version claim.
+    *  - `_manifests/` — one IndexStore manifest per version: a
+    *    `prop n_buckets <n>` line (the hash layout) and one
+    *    `table bucket=<b> <vdir>` line per live bucket, whose single
+    *    segment is the version dir that owns the bucket. The LATEST
+    *    manifest IS the table; a bucket untouched by an upsert is
+    *    re-POINTED at the older version dir that already holds it, never
+    *    rewritten.
     *
-    * An upsert: (1) resolves the latest manifest, (2) CLAIMS version N+1
-    * by exclusive create — a second concurrent writer fails LOUDLY here
-    * ([[ConcurrentProfileWriteException]]), before any work, instead of
-    * interleaving partition swaps — (3) merges the incoming tag arrays
-    * with the existing rows of ONLY the touched buckets (the rest of the
-    * table is never read), (4) writes the merged buckets to the new
-    * immutable `vNNNNN` dir, and (5) PUBLISHES by renaming the manifest
-    * into place — one atomic metadata operation. A reader (profileRead)
-    * resolving manifests concurrently sees the old snapshot or the new
-    * one, never a mix: data dirs land fully before the manifest appears,
-    * and old version dirs are immutable until [[profileVacuum]].
+    * An upsert claims version N+1 — a second concurrent writer fails
+    * LOUDLY here ([[ConcurrentIndexWriteException]]), before any data
+    * job — merges the incoming tag arrays with the existing rows of ONLY
+    * the touched buckets of the base snapshot (the rest of the table is
+    * never read), writes the merged buckets to the new immutable
+    * `vNNNNN` dir, and publishes the manifest. A reader ([[profileRead]])
+    * sees the old snapshot or the new one, never a mix, and old version
+    * dirs are immutable until [[profileVacuum]]. Version numbers form an
+    * unbroken chain and every upsert merges from its immediate
+    * predecessor — no lost updates, by construction. Empty upserts are
+    * rejected BEFORE any claim is taken.
     *
-    * A writer that crashes after claiming leaves `vNNNNN.CLAIM` residue;
-    * the next upsert fails loudly naming the file (delete it after
-    * confirming the writer is dead — its data dir, if any, is
-    * unreferenced and vacuumable). A writer that FAILS (rather than
-    * crashes) before publishing releases its own claim and deletes its
-    * partial data dir on the way out, so only a hard process death
-    * leaves residue. Between resolving the latest manifest and claiming
-    * there is a window in which another writer can commit AND release;
-    * the claim is therefore RE-VERIFIED against the manifest chain right
-    * after creation (still exactly latest+1, else release and fail
-    * loudly) — the loser can never clobber or duplicate a published
-    * version. Version numbers therefore form an unbroken chain and every
-    * upsert merges from its immediate predecessor — no lost updates, by
-    * construction. Empty upserts are rejected BEFORE any claim is taken.
+    * Crash recovery: a writer that FAILS before publishing releases its
+    * claim and drops its partial data dir on the way out. A writer that
+    * CRASHES after claiming leaves its claim file, and the next upsert
+    * fails loudly naming it; deleting that one file (once the writer is
+    * confirmed dead) is all recovery takes — the next claim of the
+    * version clears the dead writer's data dir itself.
     *
-    * `nBuckets` is fixed at table creation (it is the hash layout; the
-    * manifest records it implicitly through the bucket ids). Returns the
+    * `nBuckets` is fixed at table creation and recorded in every
+    * manifest; a call with a different layout fails loudly. Returns the
     * read-back NEW snapshot (keyCol, tagsCol, bucket). */
   def profileUpsert(spark: SparkSession, tableDir: String, newTags: DataFrame,
       keyCol: String, tagsCol: String = "tags", nBuckets: Int = 16): DataFrame = {
     def bucketOf(c: Column): Column = profileBucket(c, nBuckets)
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(manifestDir(tableDir)))
     // Normalize the incoming batch BEFORE anything else: null keys fail
     // loudly (a null can never merge — it would accumulate one orphan
     // row per upsert forever), and in-batch duplicate keys pre-aggregate
@@ -392,20 +380,19 @@ object PortraitOps {
     // touched bucket ids: O(nBuckets) driver-side metadata, like the IVF
     // centroid collects — never O(data). Computed (and the empty-upsert
     // case rejected) BEFORE any claim, so a rejected upsert leaves no
-    // CLAIM residue for later writers to trip over.
+    // claim residue for later writers to trip over.
     val touched = neu.select(bucketOf(col(keyCol)).as("bucket")).distinct()
       .collect().map(_.getInt(0)).toSet
     require(touched.nonEmpty, "profileUpsert: empty upsert — nothing to commit")
-    val base = latestManifest(spark, tableDir)
-    // the manifest records the bucket layout; a mismatched nBuckets would
-    // hash keys into the wrong dirs and silently duplicate them
-    base.flatMap(_._2).foreach(nb => require(nb == nBuckets,
-      s"profileUpsert: table $tableDir was created with nBuckets=$nb, " +
-        s"called with $nBuckets — the layouts are incompatible"))
-    val newMap = commitProfileVersion(spark, tableDir, "profileUpsert",
-        nBuckets, base) { vname =>
-      val oldTouched = base.map(_._3.filter(kv => touched(kv._1)))
-        .getOrElse(Map.empty[Int, String])
+    val snap = IndexStore.commit(spark, tableDir, "profileUpsert") {
+        (base, vname) =>
+      // the manifest records the bucket layout; a mismatched nBuckets would
+      // hash keys into the wrong dirs and silently duplicate them
+      base.map(layoutOf(tableDir, _)).foreach(nb => require(nb == nBuckets,
+        s"profileUpsert: table $tableDir was created with nBuckets=$nb, " +
+          s"called with $nBuckets — the layouts are incompatible"))
+      val baseMap = base.map(bucketMap).getOrElse(Map.empty[Int, String])
+      val oldTouched = baseMap.filter(kv => touched(kv._1))
       val merged =
         if (oldTouched.isEmpty) neu // already key-unique, sorted, distinct
         else
@@ -414,84 +401,9 @@ object PortraitOps {
             neu, keyCol, tagsCol)
       merged.withColumn("bucket", bucketOf(col(keyCol)))
         .write.partitionBy("bucket").parquet(s"$tableDir/$vname")
-      base.map(_._3).getOrElse(Map.empty[Int, String]) ++
-        touched.map(_ -> vname)
+      profileManifest(baseMap ++ touched.map(_ -> vname), nBuckets)
     }
-    readBuckets(spark, tableDir, newMap)
-  }
-
-  /** The COMMIT GATE shared by the profile-table mutations
-    * ([[profileUpsert]] / [[profileDelete]]) — claim → TOCTOU re-check
-    * → data jobs → manifest publish → cleanup, exactly the sequence
-    * profileUpsert always ran (factored, not changed):
-    *  - exclusive create of the claim serializes writers on the version
-    *    chain; the loser learns immediately and loudly. Atomic even on
-    *    `file:` — Hadoop LocalFileSystem's create(overwrite = false) is
-    *    check-then-act, so the claim goes through NIO O_EXCL there
-    *    ([[IndexStore.exclusiveCreate]]; the suite's two-thread race
-    *    test caught the local-fs hole);
-    *  - TOCTOU re-check: between the caller's manifest resolve and the
-    *    claim create, another writer can claim, COMMIT and release this
-    *    very version — its claim file is gone, so our create succeeds
-    *    even though the version is published. Verify the chain still
-    *    ends at next−1; otherwise fail loudly (the finally releases our
-    *    claim);
-    *  - `write` runs the data jobs into `tableDir/<vname>` and returns
-    *    the NEW complete bucket → version-dir map to record;
-    *  - PUBLISH: write the manifest beside its final name, then one
-    *    rename. The claim makes the final name unique, so the rename
-    *    cannot collide; readers list only *.manifest and never see a
-    *    partial commit;
-    *  - a writer that FAILS before publishing drops its partial data
-    *    dir (never another writer's: wroteData guards the TOCTOU path,
-    *    where the version's data belongs to the committed winner) and
-    *    releases the claim so the chain stays writable. */
-  private def commitProfileVersion(spark: SparkSession, tableDir: String,
-      op: String, nBuckets: Int,
-      base: Option[(Int, Option[Int], Map[Int, String])])(
-      write: String => Map[Int, String]): Map[Int, String] = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = base.map(_._1).getOrElse(0) + 1
-    val vname = f"v$next%05d"
-    val claim = new org.apache.hadoop.fs.Path(
-      s"${manifestDir(tableDir)}/$vname.CLAIM")
-    try IndexStore.exclusiveCreate(fs, claim)
-    catch { case e: java.io.IOException =>
-      throw new ConcurrentProfileWriteException(
-        s"$op: version $vname of $tableDir is already claimed " +
-          s"($claim exists) — another writer is in flight, or a crashed " +
-          "writer left residue (delete the CLAIM file once you have " +
-          s"confirmed it is dead). Underlying: ${e.getMessage}")
-    }
-    var published = false
-    var wroteData = false
-    try {
-      if (latestManifest(spark, tableDir).map(_._1).getOrElse(0) != next - 1)
-        throw new ConcurrentProfileWriteException(
-          s"$op: version $vname of $tableDir was published by a " +
-            "concurrent writer between manifest resolve and claim — rerun " +
-            "against the new snapshot")
-      wroteData = true
-      val newMap = write(vname)
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"${manifestDir(tableDir)}/.$vname.manifest.tmp")
-      val out = fs.create(tmp, true)
-      out.write((s"version $next nbuckets $nBuckets\n" + newMap.toSeq.sorted
-        .map { case (b, v) => s"$b $v" }.mkString("\n") + "\n").getBytes("UTF-8"))
-      out.close()
-      val fin = new org.apache.hadoop.fs.Path(
-        s"${manifestDir(tableDir)}/$vname.manifest")
-      if (!fs.rename(tmp, fin))
-        throw new ConcurrentProfileWriteException(s"$op: failed to publish $fin")
-      published = true
-      fs.delete(claim, false)
-      newMap
-    } finally if (!published) {
-      if (wroteData)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/$vname"), true)
-      fs.delete(claim, false)
-    }
+    readBuckets(spark, tableDir, bucketMap(snap))
   }
 
   /** DELETE profiles (by key) from a [[profileUpsert]] table — the
@@ -506,24 +418,21 @@ object PortraitOps {
     * leaves the manifest entirely (readers stop visiting it). Deleting
     * keys the table does not hold is a committed NO-OP — no version
     * churn (erasure requests repeat; idempotent by design). Null keys
-    * fail loudly (profileUpsert's stance). Same commit gate as upsert
-    * ([[commitProfileVersion]]): loud concurrent-writer failure,
-    * TOCTOU-safe, crash leaves only CLAIM residue; [[profileVacuum]]
-    * then reclaims the superseded versions — after which the deleted
-    * rows' BYTES are gone too, completing the erasure (until then they
-    * exist only in superseded snapshots, exactly Delta/Iceberg's
-    * delete-then-vacuum story). Returns the new snapshot (empty if the
-    * table emptied). */
+    * fail loudly (profileUpsert's stance). Same [[IndexStore.commit]]
+    * gate as upsert: loud concurrent-writer failure (also when a writer
+    * published after this delete read its snapshot), TOCTOU-safe, a
+    * crash leaves only a claim file; [[profileVacuum]] then reclaims the
+    * superseded versions — after which the deleted rows' BYTES are gone
+    * too, completing the erasure (until then they exist only in
+    * superseded snapshots, exactly Delta/Iceberg's delete-then-vacuum
+    * story). Returns the new snapshot (empty if the table emptied). */
   def profileDelete(spark: SparkSession, tableDir: String, keys: DataFrame,
       keyCol: String, tagsCol: String = "tags"): DataFrame = {
-    val base = latestManifest(spark, tableDir).getOrElse(
+    val snap = IndexStore.resolve(spark, tableDir).getOrElse(
       throw new IllegalStateException(
         s"profileDelete: no committed profile snapshot at $tableDir"))
-    val (_, nbOpt, baseMap) = base
-    val nBuckets = nbOpt.getOrElse(throw new IllegalStateException(
-      s"profileDelete: table $tableDir has no recorded bucket layout " +
-        "(pre-layout-stamp manifest) — upsert once with this release " +
-        "to stamp it first"))
+    val nBuckets = layoutOf(tableDir, snap)
+    val baseMap = bucketMap(snap)
     def bucketOf(c: Column): Column = profileBucket(c, nBuckets)
     val ks = keys.select(
         when(col(keyCol).isNull, raise_error(lit(
@@ -560,14 +469,22 @@ object PortraitOps {
     val live = remaining.groupBy("bucket").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val emptied = touched.filter(b => live.getOrElse(b, 0L) == 0L)
-    val newMap = commitProfileVersion(spark, tableDir, "profileDelete",
-        nBuckets, Some(base)) { vname =>
+    // an all-keys delete commits an EMPTY snapshot (no bucket table)
+    val out = IndexStore.commit(spark, tableDir, "profileDelete",
+        allowEmpty = true) { (base, vname) =>
+      // the survivors above derive from `snap`: a writer that published
+      // since must fail this delete loudly, not be overwritten by it
+      if (!base.exists(_.version == snap.version))
+        throw new ConcurrentIndexWriteException(
+          s"profileDelete: $tableDir moved past v${snap.version} while " +
+            "the delete computed its survivors — rerun against the new " +
+            "snapshot")
       remaining.write.partitionBy("bucket").parquet(s"$tableDir/$vname")
-      baseMap -- emptied ++
-        touched.diff(emptied).map(_ -> vname)
+      profileManifest(baseMap -- emptied ++ touched.diff(emptied).map(_ -> vname),
+        nBuckets)
     }
-    if (newMap.isEmpty) remaining // zero rows, correct schema
-    else readBuckets(spark, tableDir, newMap)
+    if (out.tables.isEmpty) remaining // zero rows, correct schema
+    else readBuckets(spark, tableDir, bucketMap(out))
   }
 
   /** Read the CURRENT committed snapshot of a [[profileUpsert]] table:
@@ -577,60 +494,24 @@ object PortraitOps {
     * it. Snapshot-isolated against a concurrent upsert by construction
     * (the manifest is the atomic commit point). */
   def profileRead(spark: SparkSession, tableDir: String): DataFrame =
-    readBuckets(spark, tableDir,
-      latestManifest(spark, tableDir).getOrElse(throw new IllegalStateException(
-        s"profileRead: no committed profile snapshot at $tableDir"))._3)
+    readBuckets(spark, tableDir, bucketMap(
+      IndexStore.resolve(spark, tableDir).getOrElse(
+        throw new IllegalStateException(
+          s"profileRead: no committed profile snapshot at $tableDir"))))
 
-  /** Drop everything the RETAINED manifests no longer reference:
-    * version dirs AT-OR-BELOW the latest version that own no live
-    * bucket of any retained manifest, non-retained superseded
-    * manifests, and orphaned CLAIM residue of versions at-or-below the
-    * latest. `keepVersions = N` retains the newest N manifests and
-    * every version dir their bucket maps point at — the reader-horizon
-    * knob, [[IndexStore.vacuum]]'s exactly: a [[profileRead]] that
-    * resolved its snapshot up to N−1 upserts ago still reads
-    * consistently after the vacuum; an older reader fails loudly at
-    * read time (missing version dir). The default 1 matches readers
-    * that resolve-then-read promptly (a reader is only exposed
-    * mid-query). Versions ABOVE the latest manifest are an in-flight
-    * (or crashed) writer's territory — its CLAIM file AND its data dir
-    * are both left untouched, so a vacuum racing an upsert can never
-    * delete parquet parts out from under a writer that goes on to
-    * publish. (Crashed-writer residue above the latest is reclaimed on
-    * a later vacuum, once a successful upsert has moved the latest
-    * version past it.) Returns the paths it deleted. */
+  /** Drop everything the RETAINED snapshots no longer reference —
+    * [[IndexStore.vacuum]] on the profile table: version dirs
+    * AT-OR-BELOW the latest version that own no live bucket of a retained
+    * snapshot, non-retained superseded manifests, and claim residue at or
+    * below the latest. `keepVersions = N` retains the newest N snapshots
+    * — the reader-horizon knob: a [[profileRead]] that resolved its
+    * snapshot up to N−1 upserts ago still reads consistently after the
+    * vacuum; an older reader fails loudly at read time (missing version
+    * dir). Versions ABOVE the latest are an in-flight (or crashed)
+    * writer's and are left untouched. Returns what it deleted. */
   def profileVacuum(spark: SparkSession, tableDir: String,
-      keepVersions: Int = 1): Seq[String] = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1 (got $keepVersions)")
-    val (latest, _, _) = latestManifest(spark, tableDir)
-      .getOrElse(return Nil)
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mdir = new org.apache.hadoop.fs.Path(manifestDir(tableDir))
-    val kept = fs.listStatus(mdir).map(_.getPath)
-      .filter(_.getName.matches("v\\d{5,}\\.manifest"))
-      .sortBy(p => -versionOf(p.getName)).take(keepVersions)
-    val keptVers = kept.map(p => versionOf(p.getName)).toSet
-    val live = kept.flatMap(p => parseManifest(fs, p)._3.values).toSet
-    val gone = scala.collection.mutable.ArrayBuffer.empty[String]
-    fs.listStatus(new org.apache.hadoop.fs.Path(tableDir)).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.matches("v\\d{5,}") && !live(n) &&
-          versionOf(n) <= latest) {
-        fs.delete(st.getPath, true); gone += n
-      }
-    }
-    fs.listStatus(new org.apache.hadoop.fs.Path(manifestDir(tableDir)))
-      .foreach { st =>
-        val n = st.getPath.getName
-        val stale =
-          (n.endsWith(".manifest") && versionOf(n) < latest &&
-            !keptVers(versionOf(n))) ||
-            (n.endsWith(".CLAIM") && versionOf(n) <= latest)
-        if (stale) { fs.delete(st.getPath, false); gone += n }
-      }
-    gone.toSeq
-  }
+      keepVersions: Int = 1): Seq[String] =
+    IndexStore.vacuum(spark, tableDir, keepVersions)
 
   /** The store's key → bucket hash, shared by BOTH mutations: the
     * bucket layout is the correctness-critical invariant (a mismatched
@@ -639,48 +520,29 @@ object PortraitOps {
   private def profileBucket(c: Column, nBuckets: Int): Column =
     pmod(xxhash64(c), lit(nBuckets)).cast("int")
 
-  private def manifestDir(tableDir: String): String = s"$tableDir/_manifests"
+  /** A profile snapshot's bucket → owning version-dir map: each
+    * `bucket=<b>` table has exactly one segment. */
+  private def bucketMap(snap: IndexStore.Snapshot): Map[Int, String] =
+    snap.tables.map { case (t, segs) => t.stripPrefix("bucket=").toInt -> segs.head }
 
-  private def versionOf(name: String): Int =
-    name.stripPrefix("v").takeWhile(_.isDigit).toInt
+  /** What a profile commit records: one single-segment table per live
+    * bucket, plus the bucket layout. */
+  private def profileManifest(buckets: Map[Int, String], nBuckets: Int)
+      : (Map[String, Seq[String]], Map[String, String]) =
+    (buckets.map { case (b, v) => s"bucket=$b" -> Seq(v) },
+      Map("n_buckets" -> nBuckets.toString))
 
-  /** Latest committed manifest as (version, recorded nBuckets — None on
-    * pre-layout-stamp manifests — and bucket → version-dir). */
-  private def latestManifest(spark: SparkSession, tableDir: String)
-      : Option[(Int, Option[Int], Map[Int, String])] = {
-    val dir = new org.apache.hadoop.fs.Path(manifestDir(tableDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return None
-    val manifests = fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.matches("v\\d{5,}\\.manifest"))
-    if (manifests.isEmpty) return None
-    Some(parseManifest(fs, manifests.maxBy(p => versionOf(p.getName))))
-  }
+  /** The bucket layout a profile snapshot records. */
+  private def layoutOf(tableDir: String, snap: IndexStore.Snapshot): Int =
+    snap.props.getOrElse("n_buckets", throw new IllegalStateException(
+      s"$tableDir: manifest v${snap.version} records no n_buckets — not a " +
+        "profile table")).toInt
 
-  /** One manifest file parsed to (version, recorded nBuckets, bucket →
-    * version-dir). */
-  private def parseManifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): (Int, Option[Int], Map[Int, String]) = {
-    val in = fs.open(path)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    val head = lines.head.split(" ")
-    val ver = head(1).toInt
-    val nb = if (head.length >= 4 && head(2) == "nbuckets")
-      Some(head(3).toInt) else None
-    val buckets = lines.tail.map { l =>
-      val Array(b, v) = l.split(" ", 2)
-      b.toInt -> v
-    }.toMap
-    (ver, nb, buckets)
-  }
-
-  /** Union of per-version bucket reads for one manifest bucket map. An
-    * EMPTY map (a [[profileDelete]] erased every profile) fails loudly:
-    * with no live version dir there is no schema to produce an empty
-    * frame from — drop the table dir, or upsert to restart the chain
-    * (the next upsert writes fresh buckets as day 0). */
+  /** Union of per-version bucket reads for one bucket map. An EMPTY map
+    * (a [[profileDelete]] erased every profile) fails loudly: with no
+    * live version dir there is no schema to produce an empty frame from
+    * — drop the table dir, or upsert to restart the chain (the next
+    * upsert writes fresh buckets as day 0). */
   private def readBuckets(spark: SparkSession, tableDir: String,
       buckets: Map[Int, String]): DataFrame = {
     if (buckets.isEmpty) throw new IllegalStateException(
@@ -692,10 +554,3 @@ object PortraitOps {
     }.reduce(_.unionByName(_))
   }
 }
-
-/** A [[PortraitOps.profileUpsert]] lost the exclusive version claim: a
-  * concurrent writer is in flight (or a crashed one left CLAIM residue).
-  * The losing upsert has done no work and written no data — rerun it
-  * after the winner commits. */
-final class ConcurrentProfileWriteException(msg: String)
-  extends IllegalStateException(msg)

@@ -241,7 +241,7 @@ class PortraitSpec extends SparkTestBase {
       "a reader overlapping an uncommitted upsert must see the old snapshot")
     // CONCURRENT WRITER: the claim is held -> a second upsert fails loudly
     // and leaves the table unchanged
-    val boom = intercept[graft.api.ConcurrentProfileWriteException] {
+    val boom = intercept[graft.api.ConcurrentIndexWriteException] {
       PortraitOps.profileUpsert(s, dir, Seq((3L, Seq("y"))).toDF("k", "tags"),
         "k", nBuckets = 8)
     }
@@ -338,11 +338,11 @@ class PortraitSpec extends SparkTestBase {
     assert(exists(s"$dir/_manifests/v00002.CLAIM"),
       "vacuum must not delete an in-flight writer's claim")
     assert(!gone.exists(_.contains("v00002")))
-    // the in-flight writer crashes; manual residue cleanup, then a real
-    // commit lands as v00002 and the snapshot is exactly the two keys
+    // the in-flight writer crashes; deleting its CLAIM file is the whole
+    // manual cleanup (its data dir stays behind), then a real commit
+    // lands as v00002 and the snapshot is exactly the two keys
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$dir/_manifests/v00002.CLAIM"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v00002"), true)
     PortraitOps.profileUpsert(s, dir, Seq((2L, Seq("b"))).toDF("k", "tags"),
       "k", nBuckets = 4)
     val out = PortraitOps.profileRead(s, dir).collect()
@@ -396,7 +396,7 @@ class PortraitSpec extends SparkTestBase {
     "tag is lost or duplicated (the local-fs O_EXCL claim gate)") {
     val s = spark
     import s.implicits._
-    import graft.api.{ConcurrentProfileWriteException, PortraitOps}
+    import graft.api.{ConcurrentIndexWriteException, PortraitOps}
     val dir = java.nio.file.Files.createTempDirectory("graft_prace_")
       .toString + "/t"
     PortraitOps.profileUpsert(s, dir, Seq((0L, Seq("seed"))).toDF("k", "tags"),
@@ -416,7 +416,7 @@ class PortraitSpec extends SparkTestBase {
                   "k", nBuckets = 4)
                 true
               } catch {
-                case _: ConcurrentProfileWriteException => false
+                case _: ConcurrentIndexWriteException => false
               }
             }
           })
