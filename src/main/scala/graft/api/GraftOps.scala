@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -642,7 +642,7 @@ object GraftOps {
           .coalesce(1).write.parquet(s"$indexDir/$v/meta"),
         () => minhashDocSketch(corpus, idCol, textCol, nHashes, bands)
           .write.parquet(s"$indexDir/$v/docs"))
-      spark.read.parquet(s"$indexDir/$v/docs")
+      IndexStore.readWritten(spark, s"$indexDir/$v/docs")
         .select(col("doc_id"), col("sz"),
           posexplode(col("sigs")).as(Seq("band", "sig")))
         .write.parquet(s"$indexDir/$v/bands")
@@ -2137,12 +2137,14 @@ object GraftOps {
     * and rank first in every top-k. With a null norm the cosine is null,
     * null comparisons are false, and the top-k stages filter nulls — a
     * zero vector (no direction, no cosine) matches nothing and ranks
-    * nowhere, on every operator uniformly. Requires the graft_dot
-    * extension (registered by the caller's session via GraftExtensions). */
-  private def withNorm(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    * nowhere, on every operator uniformly. Registers graft_dot on the
+    * frame's session (GraftExtensions), so no caller has to. */
+  private def withNorm(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    GraftExtensions.register(emb.sparkSession)
     emb.withColumn("emb", expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))"))
       .withColumn("nrm", nullif(sqrt(expr("graft_dot(emb, emb)")), lit(0.0)))
       .withColumnRenamed(idCol, "vec_id")
+  }
 
   /** Exact embedding-cosine near-dup pairs at `minCosine` (4dp-rounded
     * boundary). All-pairs — the recall-1.0 baseline — but tiled, never
@@ -2429,7 +2431,7 @@ object GraftOps {
             "srpIndexBuild")
           .select(col("vec_id"), col("nrm"), col("emb"), col("sigs"))
           .write.parquet(s"$indexDir/$v/docs"))
-      spark.read.parquet(s"$indexDir/$v/docs")
+      IndexStore.readWritten(spark, s"$indexDir/$v/docs")
         .select(col("vec_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
         .write.parquet(s"$indexDir/$v/bands")
       (BandTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
@@ -2536,6 +2538,7 @@ object GraftOps {
       snapshot: Option[IndexStore.Snapshot] = None): DataFrame = {
     require(maxBucketSize.forall(_ >= 2), "maxBucketSize must be >= 2")
     val spark = fresh.sparkSession
+    GraftExtensions.register(spark) // the verify join's graft_dot
     // ONE snapshot resolve covers both history tables (see
     // dedupNearSketched; `snapshot` is the replay override)
     val snap = snapshot.getOrElse(
@@ -2686,13 +2689,12 @@ object GraftOps {
     * the +1 floor, so it stays positive even for terms in most docs):
     *   score(q,d) = Σ_{t∈q} ln(1 + (N − df_t + ½)/(df_t + ½)) ·
     *     tf_td·(k1+1) / (tf_td + k1·(1 − b + b·dl_d/avgdl)).
-    * Scale shape: the corpus reduces to per-(doc, term) frequencies once
-    * (map-side-combined groupBy); the query terms BROADCAST into the
-    * postings equi-join so only matching postings ever flow — never the
-    * full term index; document frequencies are computed for query terms
-    * only; per-(query, doc) partials sum map-side; and the per-query
-    * top-k rides the bounded [[graft.functions.TopKAgg]] (two-stage,
-    * O(partitions × k) shuffle rows per query). N and avgdl are two
+    * Scale shape: the query terms BROADCAST into the token stream, so
+    * only tokens of query terms ever reach the per-(doc, term) frequency
+    * fold — never the full term index; document frequencies are
+    * computed for query terms only; and the per-query top-k rides the
+    * bounded [[graft.functions.TopKAgg]] (see the shared tail,
+    * [[bm25Rank]]). N and avgdl are two
     * driver-collected scalars (bounded metadata, like IVF centroids).
     * Ranking is the 4dp-rounded score with doc-id tiebreak —
     * deterministic and engine-portable (all-double arithmetic; the
@@ -2704,10 +2706,14 @@ object GraftOps {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, "k must be positive")
     require(k1 >= 0 && b >= 0 && b <= 1, "expect k1 ≥ 0 and b in [0, 1]")
+    val qt = queries.select(col(qidCol).cast("long").as("qid"),
+      explode(col(termsCol)).as("term")).distinct()
     val toks = fanOutForCpu(docs).select(col(idCol).cast("long").as("did"),
       size(split(col(textCol), " ")).cast("double").as("dl"),
       explode(split(col(textCol), " ")).as("term"))
-    val tf = toks.groupBy("did", "term", "dl")
+    val tf = toks.join(broadcast(qt.select("term").distinct()), "term")
+      .repartition(col("term"))
+      .groupBy("did", "term", "dl")
       .agg(count(lit(1)).cast("double").as("tf"))
     // two scalars of driver metadata: corpus size and mean doc length
     val st = docs.agg(count(lit(1)).cast("double"),
@@ -2716,30 +2722,32 @@ object GraftOps {
     require(st.getDouble(0) > 0 && !st.isNullAt(1),
       "bm25TopK: empty document corpus (N = 0)")
     val (n, avgdl) = (st.getDouble(0), st.getDouble(1))
-    val qt = queries.select(col(qidCol).cast("long").as("qid"),
-      explode(col(termsCol)).as("term")).distinct()
     bm25Rank(tf, qt, n, avgdl, k, k1, b)
   }
 
   /** The BM25 scoring tail shared by [[bm25TopK]] (tf freshly derived
     * from the corpus) and [[bm25AgainstCorpus]] (tf folded from the
-    * persisted postings): `tf` is (did, term, dl, tf) all-numeric, `qt`
-    * is the distinct (qid, term) pairs. Document frequencies count over
-    * query terms only, both join legs broadcast (queries are small by
-    * contract), partials sum map-side, and the per-query top-k rides
-    * the bounded [[graft.functions.TopKAgg]]. */
+    * persisted postings): `tf` is (did, term, dl, tf) all-numeric, one
+    * row per live (query term, doc) pair, hash-partitioned by term;
+    * `qt` is the distinct (qid, term) pairs. The document frequency is
+    * a window count over that ONE fold — the term partitioning already
+    * satisfies the window, so df costs no second postings scan and no
+    * exchange. The query leg broadcasts (queries are small by
+    * contract), and one qid exchange serves both the per-(query, doc)
+    * sum and the per-query top-k, which rides the bounded
+    * [[graft.functions.TopKAgg]]. */
   private def bm25Rank(tf: DataFrame, qt: DataFrame, n: Double,
       avgdl: Double, k: Int, k1: Double, b: Double): DataFrame = {
-    val dfq = tf.join(broadcast(qt.select("term").distinct()), "term")
-      .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
     val idf = log(lit(1.0) +
       (lit(n) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val topk = udaf(new graft.functions.TopKAgg(k))
-    tf.join(broadcast(qt), "term")
-      .join(broadcast(dfq), "term")
+    tf.withColumn("df",
+        count(lit(1)).over(Window.partitionBy("term")).cast("double"))
+      .join(broadcast(qt), "term")
       .withColumn("part", idf * col("tf") * lit(k1 + 1.0) /
         (col("tf") +
           lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
+      .repartition(col("qid"))
       .groupBy("qid", "did").agg(round(sum("part"), 4).as("score"))
       .groupBy("qid").agg(topk(col("score"), col("did")).as("nn"))
       .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "n")))
@@ -2755,17 +2763,24 @@ object GraftOps {
     * rewards agreement without comparing the lists' incommensurable raw
     * scores. Rank-only arithmetic (1/(c+rn) over ints, 6dp-rounded sum)
     * crosses engines exactly; ties break to the smaller doc_id. One
-    * union + one map-side-combined groupBy + the bounded per-query
-    * [[graft.functions.TopKAgg]] — fusion costs O(Σ list sizes),
-    * independent of corpus size. Emits (qid, rn, doc_id, rrf). */
+    * union + one qid exchange serving both the per-(query, doc) sum and
+    * the bounded per-query [[graft.functions.TopKAgg]] — fusion costs
+    * O(Σ list sizes), independent of corpus size. Input ROW ORDER is
+    * ignored: ranks come from `rn` alone, and a top-level global sort on
+    * an input (every graft ranked list ends in `orderBy(qid, rn)`) is
+    * stripped from its plan before the union, so the sort's range
+    * shuffle and sampling job never run. Emits (qid, rn, doc_id, rrf),
+    * ordered. */
   def rrfFuse(lists: Seq[DataFrame], k: Int, c: Int = 60): DataFrame = {
     require(lists.nonEmpty, "rrfFuse needs at least one ranked list")
     require(k >= 1 && c >= 0, "expect k ≥ 1 and c ≥ 0")
-    val std = lists.map(_.select(col("qid").cast("long").as("qid"),
-      col("rn").cast("int").as("rn"),
-      col("doc_id").cast("long").as("doc_id")))
+    val std = lists.map(l => org.apache.spark.sql.GraftPlans
+      .withoutGlobalSort(l).select(col("qid").cast("long").as("qid"),
+        col("rn").cast("int").as("rn"),
+        col("doc_id").cast("long").as("doc_id")))
     val topk = udaf(new graft.functions.TopKAgg(k))
     std.reduce(_ unionByName _)
+      .repartition(col("qid"))
       .groupBy("qid", "doc_id")
       .agg(round(sum(lit(1.0) / (lit(c) + col("rn"))), 6).as("rrf"))
       .groupBy("qid").agg(topk(col("rrf"), col("doc_id")).as("nn"))
@@ -3113,32 +3128,38 @@ object GraftOps {
     // repeat probe of an unmoved index pays zero metadata jobs
     val nBuckets = metaRowOf(spark, indexDir, snap).getInt(0)
     val (nDocs, sumDl) =
-      idxMemo(spark, indexDir, snap.version, "stats") {
+      idxMemo(spark, indexDir, snap.chain, snap.version, "stats") {
+        // one row per segment: summed driver-side, one job and no
+        // global-aggregate exchange
         val st = IndexStore.readTable(spark, indexDir, snap, "stats")
-          .agg(coalesce(sum("n_docs"), lit(0L)),
-            coalesce(sum("sum_dl"), lit(0L))).head()
-        (st.getLong(0), st.getLong(1))
+          .select("n_docs", "sum_dl").collect()
+        (st.map(_.getLong(0)).sum, st.map(_.getLong(1)).sum)
       }
     require(nDocs > 0,
       "bm25AgainstCorpus: the index holds no live documents (N = 0)")
     val avgdl = sumDl.toDouble / nDocs.toDouble
-    // the query-term pairs pin once — they feed the touched-bucket
-    // collect, the df count, and the scoring join; both the pinned
-    // frame and the collected bucket ids are PREPARED per (version,
-    // query plan) ([[preparedProbes]] — a repeat probe of an unmoved
-    // index pays zero query-side jobs)
-    val (touchedArr, qt) = preparedProbes(spark, indexDir, snap.version,
+    // the query-term pairs collect ONCE (one job, their buckets
+    // computed in the same pass) — they give the touched buckets, the
+    // term filter, and the scoring join's driver-local (qid, term)
+    // frame; all three are PREPARED per (version, query plan)
+    // ([[preparedProbes]] — a repeat probe of an unmoved index pays
+    // zero query-side jobs)
+    val ((touched, terms), qt) = preparedProbes(spark, indexDir, snap,
       s"bm25:$qidCol:$termsCol", queries) {
-      val q0 = queries.select(col(qidCol).cast("long").as("qid"),
-        explode(col(termsCol)).as("term")).distinct().localCheckpoint(false)
-      (q0.select(pmod(xxhash64(col("term")), lit(nBuckets.toLong))
-          .cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)), q0)
+      val pairs = queries.select(col(qidCol).cast("long").as("qid"),
+        explode(col(termsCol)).as("term"))
+      val rows = pairs.withColumn("b",
+        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
+        .collect()
+      ((rows.map(_.getInt(2)).distinct.toSeq, rows.map(_.get(1)).distinct.toSeq),
+        localFrame(spark, rows.map(r => Row(r.get(0), r.get(1))).distinct,
+          pairs.schema))
     }
-    val touched = touchedArr.toSeq
+    // hash-partitioned by term ONCE: the (term, did) fold and
+    // bm25Rank's df window both ride this exchange
     val tf = IndexStore.readTable(spark, indexDir, snap, "postings")
-      .filter(col("bucket").isin(touched: _*))
-      .join(broadcast(qt.select("term").distinct()), "term")
+      .filter(col("bucket").isin(touched: _*) && col("term").isin(terms: _*))
+      .repartition(col("term"))
       .groupBy("term", "did")
       .agg(sum("tf").cast("double").as("tf"),
         sum("dl").cast("double").as("dl"))
@@ -3647,6 +3668,8 @@ object GraftOps {
     * disappears from the top-k). */
   private def ivfProbeSearch(corpus: DataFrame, probes: DataFrame,
       k: Int, excludeSelf: Boolean = true): DataFrame = {
+    // a memo-served probe frame skips withNorm's registration
+    GraftExtensions.register(corpus.sparkSession)
     val topk = udaf(new graft.functions.TopKAgg(k))
     corpus.join(broadcast(probes), Seq("bucket"))
       .filter(if (excludeSelf) col("qid") =!= col("vid") else lit(true))
@@ -3867,23 +3890,24 @@ object GraftOps {
     * deployment: ~4 small Spark jobs per call, re-read although the
     * index version has not moved (r15 VERDICT residual (b), measured as
     * most of q146:search's 1.41 s). Entries are keyed by (session,
-    * indexDir, COMMITTED VERSION, table) — a fresh commit is a fresh
-    * version, so staleness is impossible by keying, not by
-    * invalidation hooks (spec-pinned: a rebuild at the same dir must be
-    * observed by the next search). Values are plain driver-side arrays
-    * (no checkpoint blocks to release), LRU-bounded; an out-of-band
-    * delete of a store's `_manifests` history followed by a rebuild
-    * that REUSES a version number within one session is outside the
-    * store contract (the same stance as rm -rf mid-query). Keys hold
-    * the session strongly (the docCompCache stance): a stopped
-    * session's entries age out under the LRU bound — 64 small arrays,
-    * not frames — rather than via a lifecycle listener. */
+    * indexDir, version CHAIN, COMMITTED VERSION, table) — a fresh
+    * commit is a fresh version, and a dir deleted and rebuilt restarts
+    * its versions under a fresh chain ([[IndexStore]]), so staleness
+    * is impossible by keying, not by invalidation hooks (spec-pinned:
+    * a rebuild at the same dir must be observed by the next search,
+    * also after the dir was deleted in between). Values are plain
+    * driver-side arrays (no checkpoint blocks to release),
+    * LRU-bounded. Keys hold the session strongly (the docCompCache
+    * stance): a stopped session's entries age out under the LRU bound —
+    * 64 small arrays, not frames — rather than via a lifecycle
+    * listener. */
   private val IdxMetaCacheMax = 64
   private val idxMetaCache = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, String), Any]()
+    (org.apache.spark.sql.SparkSession, String, String, Int, String), Any]()
   private def idxMemo[T](spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, version: Int, tag: String)(build: => T): T = {
-    val k = (spark, indexDir, version, tag)
+      indexDir: String, chain: String, version: Int, tag: String)
+      (build: => T): T = {
+    val k = (spark, indexDir, chain, version, tag)
     val hit = idxMetaCache.synchronized {
       if (idxMetaCache.containsKey(k)) {
         val v = idxMetaCache.remove(k) // re-insert = LRU touch
@@ -3912,19 +3936,20 @@ object GraftOps {
     idxMetaCache.synchronized(idxMetaCache.clear())
 
   /** A snapshot's meta-table head row, memoized by its OWNING SEGMENT
-    * DIR (immutable once written; appends carry the meta segment list
-    * unchanged, so — unlike a per-version key — the memo hits across a
-    * whole append/retract chain): every lifecycle mutation and probe
-    * otherwise pays one parquet-read job per commit for a row that
-    * only a rebuild/compact can change. Multi-segment meta (no current
-    * layout produces one) reads plain, uncached. */
+    * DIR within the version chain (immutable once written; appends
+    * carry the meta segment list unchanged, so — unlike a per-version
+    * key — the memo hits across a whole append/retract chain): every
+    * lifecycle mutation and probe otherwise pays one parquet-read job
+    * per commit for a row that only a rebuild/compact can change.
+    * Multi-segment meta (no current layout produces one) reads plain,
+    * uncached. */
   private[api] def metaRowOf(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, snap: IndexStore.Snapshot)
       : org.apache.spark.sql.Row = {
     val segs = snap.tables.getOrElse("meta", Seq.empty)
     if (segs.size != 1)
       IndexStore.readTable(spark, indexDir, snap, "meta").head()
-    else idxMemo(spark, indexDir, IndexStore.versionOf(segs.head),
+    else idxMemo(spark, indexDir, snap.chain, IndexStore.versionOf(segs.head),
         "metarow") {
       IndexStore.readTable(spark, indexDir, snap, "meta").head()
     }
@@ -3932,12 +3957,20 @@ object GraftOps {
 
   /** A PREPARED probe side: the canonicalized query plan it was built
     * from (verified on every hit — a hash key alone could collide),
-    * the collected touched-bucket ids, and the checkpointed probe
-    * frame. */
+    * the collected probe metadata (touched-bucket ids, query terms),
+    * and the probe frame. */
   private final case class PreparedProbes(
     plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    touched: Array[Int],
+    meta: Any,
     probes: DataFrame)
+
+  /** A small collected frame re-served as a driver-local relation — a
+    * search's probe side, collected anyway for its bucket ids, is never
+    * recomputed, checkpointed or re-read from executor storage. */
+  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[Row], schema: org.apache.spark.sql.types.StructType)
+      : DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** PREPARED-SEARCH memo (VERDICT r16 task 3 — the serving path's
     * second half): [[idxMemo]] already pins the quantizer metadata per
@@ -3947,10 +3980,10 @@ object GraftOps {
     * collecting its touched-bucket ids. A query-serving deployment
     * replays the same query plan against the same index version over
     * and over, so this memoizes BOTH, keyed by (session, indexDir,
-    * COMMITTED VERSION, dial tag, canonicalized analyzed plan of the
-    * caller's query frame):
+    * chain, COMMITTED VERSION, dial tag, canonicalized analyzed plan of
+    * the caller's query frame):
     *  - staleness is impossible BY KEYING, exactly idxMemo's argument —
-    *    a fresh commit is a fresh version;
+    *    a fresh commit is a fresh (chain, version);
     *  - two textually different but semantically equal plans share an
     *    entry (Spark's own exchange-reuse equivalence, via
     *    `sameResult`); a hash collision cannot serve wrong buckets
@@ -3958,15 +3991,16 @@ object GraftOps {
     *    every hit (mismatch falls through to a fresh build, uncached);
     *  - a query frame with ANY non-deterministic expression bypasses
     *    the memo entirely — replaying it is not semantics-preserving;
-    *  - the cached probe frame is a localCheckpoint: its blocks live
-    *    in executor storage for the session and are released by the
+    *  - the cached probe frame is a driver-local relation
+    *    ([[localFrame]]) or a localCheckpoint, whose blocks live in
+    *    executor storage for the session and are released by the
     *    ContextCleaner when the LRU evicts the reference.
     * The probe side is BOUNDED (queries × nProbe rows for ANN, query
     * terms for BM25 — both broadcast downstream), so pinning it is the
     * same budget class as the metadata memo, not a data-sized cache. */
-  private def preparedProbes(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, version: Int, tag: String, queries: DataFrame)
-      (build: => (Array[Int], DataFrame)): (Array[Int], DataFrame) = {
+  private def preparedProbes[T](spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, snap: IndexStore.Snapshot, tag: String,
+      queries: DataFrame)(build: => (T, DataFrame)): (T, DataFrame) = {
     val analyzed = queries.queryExecution.analyzed
     val nonDet = analyzed.exists(p =>
       p.expressions.exists(e => !e.deterministic))
@@ -3974,11 +4008,11 @@ object GraftOps {
     else {
       val canon = analyzed.canonicalized
       val key = s"$tag:${canon.hashCode()}"
-      val hit = idxMemo(spark, indexDir, version, key) {
-        val (touched, probes) = build
-        PreparedProbes(canon, touched, probes)
+      val hit = idxMemo(spark, indexDir, snap.chain, snap.version, key) {
+        val (meta, probes) = build
+        PreparedProbes(canon, meta, probes)
       }
-      if (hit.plan.sameResult(canon)) (hit.touched, hit.probes)
+      if (hit.plan.sameResult(canon)) (hit.meta.asInstanceOf[T], hit.probes)
       else build // hash collision: serve fresh, leave the cache alone
     }
   }
@@ -3997,9 +4031,11 @@ object GraftOps {
     * IndexOutOfBounds that reads like a data bug. */
   private def readCentroidsSnap(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, snap: IndexStore.Snapshot): Array[Array[Double]] =
-    idxMemo(spark, indexDir, snap.version, "centroids") {
+    idxMemo(spark, indexDir, snap.chain, snap.version, "centroids") {
+      // nLists rows, ordered driver-side: a global orderBy would add a
+      // sampling job and a shuffle to every fresh search
       val cs = IndexStore.readTable(spark, indexDir, snap, "centroids")
-        .orderBy("lid").collect().map(_.getSeq[Double](1).toArray)
+        .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
       require(cs.nonEmpty, s"no IVF index at $indexDir — the centroids " +
         "table is empty; build one with ivfBuild first")
       cs
@@ -4027,14 +4063,15 @@ object GraftOps {
     val probe = recallTarget.map(nProbeFor(_, centers.length)).getOrElse(nProbe)
     // probe frame + touched buckets prepared per (version, query plan)
     // ([[preparedProbes]] — a repeat probe of an unmoved index pays
-    // zero query-side jobs)
-    val (probed, probes) = preparedProbes(spark, indexDir, snap.version,
+    // zero query-side jobs): ONE collect of the probe rows gives both
+    val (probed, probes) = preparedProbes(spark, indexDir, snap,
       s"ivf:$probe:$idCol:$vecCol", queries) {
       val ps = probesOf(
         requireIndexDim(withNorm(queries, idCol, vecCol),
           centers(0).length, "ivfSearch"), centers, probe)
-        .localCheckpoint(false)
-      (ps.select("bucket").distinct().collect().map(_.getInt(0)), ps)
+      val rows = ps.collect()
+      (rows.map(_.getAs[Int]("bucket")).distinct, localFrame(spark, rows,
+        ps.schema))
     }
     // the bucket filter pushes through the segment union into every
     // per-segment scan — partition pruning holds per segment; the read
@@ -4358,7 +4395,7 @@ object GraftOps {
   private def readCodebooksSnap(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, snap: IndexStore.Snapshot, m: Int,
       ksub: Int): Array[Array[Array[Double]]] =
-    idxMemo(spark, indexDir, snap.version, "codebooks") {
+    idxMemo(spark, indexDir, snap.chain, snap.version, "codebooks") {
       val rows = IndexStore.readTable(spark, indexDir, snap, "codebooks")
         .collect().map(r => ((r.getInt(0), r.getInt(1)),
           r.getSeq[Double](2).toArray)).toMap
@@ -4375,7 +4412,7 @@ object GraftOps {
     * loudly here instead of mis-ranking silently. */
   private def readIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, snap: IndexStore.Snapshot): (Int, Int, Int) =
-    idxMemo(spark, indexDir, snap.version, "meta") {
+    idxMemo(spark, indexDir, snap.chain, snap.version, "meta") {
       val mt = IndexStore.readTable(spark, indexDir, snap, "meta")
       val enc = if (mt.columns.contains("enc"))
         mt.select("enc").head().getString(0) else "<unstamped>"
@@ -4599,7 +4636,7 @@ object GraftOps {
     // the collected bucket ids are PREPARED per (version, query plan)
     // ([[preparedProbes]]): a repeat probe of an unmoved index pays
     // zero query-side jobs.
-    val (probed, probes) = preparedProbes(spark, indexDir, snap.version,
+    val (probed, probes) = preparedProbes(spark, indexDir, snap,
       s"pq:$probe:$idCol:$vecCol", queries) {
       val ps = probesOf(q, centers, probe).withColumn("lut", lut)
         .withColumn("qc", qc)
@@ -6788,14 +6825,14 @@ object GraftOps {
     val segsAfter = uniSegs.filter(IndexStore.versionOf(_) > baseVer)
     val v: Long = if (segsAfter.isEmpty) vBase else {
       val deltaUni = segsAfter
-        .map(sv => spark.read.parquet(s"$indexDir/$sv/uni_counts"))
+        .map(IndexStore.readSegment(spark, indexDir, snap, "uni_counts", _))
         .reduce(_.unionByName(_))
         .groupBy("w").agg(sum("cnt").as("d"), max("bucket").as("bucket"))
         .localCheckpoint(false)
       val touched = deltaUni.select("bucket").distinct()
         .collect().map(_.getInt(0)).toSeq
       val baseUni = uniSegs.filter(IndexStore.versionOf(_) <= baseVer)
-        .map(sv => spark.read.parquet(s"$indexDir/$sv/uni_counts"))
+        .map(IndexStore.readSegment(spark, indexDir, snap, "uni_counts", _))
         .reduce(_.unionByName(_))
         .filter(col("bucket").isin(touched: _*))
         .groupBy("w").agg(sum("cnt").as("o"))

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned-snapshot store shared by the persistent index families
   * (fingerprint / SRP / IVF / ...) and the profile store: one
@@ -26,10 +27,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    version N's dir holds only the tables (or table deltas) commit
   *    N wrote.
   *  - `_manifests/vNNNNN.manifest` — the commit record: a `version`
-  *    header, optional `prop <key> <value>` lines (the replay
-  *    watermark lives here), and one `table <name> <vdir...>` line
-  *    per table listing the segment dirs that compose it, oldest
-  *    first. The LATEST manifest IS the index.
+  *    header; a `chain <uuid>` line naming the version chain (drawn
+  *    by the first commit into an empty dir, inherited by every later
+  *    one — a dir deleted and rebuilt restarts at v00001 under a NEW
+  *    chain, so (chain, version) identifies one commit and
+  *    (chain, vdir) one segment, the keys of every metadata memo);
+  *    optional `prop <key> <value>` lines (the replay watermark lives
+  *    here); one `schema <id> <json>` line per DISTINCT segment read
+  *    schema (Spark's StructType JSON, exactly what
+  *    `spark.read.parquet(segment).schema` infers: partition columns
+  *    last); and one `table <name> <vdir>:<id> ...` line per table
+  *    listing the segment dirs that compose it, oldest first, each with
+  *    its schema id. Reads pass the recorded schema (`.schema(...)`),
+  *    so no read of a committed table runs Spark's one-task
+  *    schema-inference job. The LATEST manifest IS the index.
   *  - `_manifests/vNNNNN.CLAIM` — a writer's exclusive version claim.
   *
   * A commit: (1) resolves the latest manifest, (2) CLAIMS version
@@ -59,10 +70,18 @@ private[graft] object IndexStore {
 
   /** One committed snapshot: manifest version, commit properties
     * (free-form whitespace-free key/values — the curateIncremental
-    * replay watermark rides here), and table → owning segment
-    * version-dirs, oldest first. */
+    * replay watermark rides here), table → owning segment
+    * version-dirs, oldest first, each (table, vdir) segment's recorded
+    * read schema, and the version chain's identity. */
   final case class Snapshot(version: Int, props: Map[String, String],
-      tables: Map[String, Seq[String]])
+      tables: Map[String, Seq[String]],
+      schemas: Map[(String, String), StructType], chain: String) {
+    /** The recorded read schema of `table`'s segment `vdir`. */
+    def schema(table: String, vdir: String): StructType =
+      schemas.getOrElse((table, vdir), throw new IllegalStateException(
+        s"manifest v$version records no schema for segment $vdir of " +
+          s"table '$table'"))
+  }
 
   /** The latest committed snapshot, or None when `indexDir` holds no
     * published manifest (no index). */
@@ -94,13 +113,22 @@ private[graft] object IndexStore {
     * top push through the union into every segment scan, so partition
     * pruning (IVF's `bucket IN (probed)`) holds per segment. */
   def readTable(spark: SparkSession, indexDir: String, snap: Snapshot,
-      table: String): DataFrame = {
-    val segs = snap.tables.getOrElse(table, throw new IllegalStateException(
+      table: String): DataFrame =
+    segmentsOf(indexDir, snap, table)
+      .map(readSegment(spark, indexDir, snap, table, _))
+      .reduce(_.unionByName(_))
+
+  /** One segment of a snapshot's table, read with its recorded schema. */
+  def readSegment(spark: SparkSession, indexDir: String, snap: Snapshot,
+      table: String, vdir: String): DataFrame =
+    spark.read.schema(snap.schema(table, vdir))
+      .parquet(s"$indexDir/$vdir/$table")
+
+  private def segmentsOf(indexDir: String, snap: Snapshot,
+      table: String): Seq[String] =
+    snap.tables.getOrElse(table, throw new IllegalStateException(
       s"index at $indexDir: manifest v${snap.version} records no table " +
         s"'$table' — the directory does not hold this kind of index"))
-    segs.map(v => spark.read.parquet(s"$indexDir/$v/$table"))
-      .reduce(_.unionByName(_))
-  }
 
   /** [[readTable]] with every row tagged (`segCol`, int) by the
     * manifest version of the segment it lives in — the SEQUENCE NUMBER
@@ -112,13 +140,54 @@ private[graft] object IndexStore {
     * caller filters on data columns still push into every segment scan
     * unchanged. */
   def readTableTagged(spark: SparkSession, indexDir: String, snap: Snapshot,
-      table: String, segCol: String): DataFrame = {
-    val segs = snap.tables.getOrElse(table, throw new IllegalStateException(
-      s"index at $indexDir: manifest v${snap.version} records no table " +
-        s"'$table' — the directory does not hold this kind of index"))
-    segs.map(v => spark.read.parquet(s"$indexDir/$v/$table")
+      table: String, segCol: String): DataFrame =
+    segmentsOf(indexDir, snap, table)
+      .map(v => readSegment(spark, indexDir, snap, table, v)
         .withColumn(segCol, org.apache.spark.sql.functions.lit(versionOf(v))))
       .reduce(_.unionByName(_))
+
+  /** A parquet dir read with the schema [[inferSchema]] derives — for a
+    * segment a commit wrote but has not yet recorded (a build reading
+    * back its own fresh table). */
+  def readWritten(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(inferSchema(spark, path)).parquet(path)
+
+  /** The schema `spark.read.parquet(path).schema` infers, WITHOUT the
+    * one-task Spark job that inference runs: the data columns come from
+    * one data file's footer (the Spark schema every parquet write
+    * stamps there — the same single footer Spark's non-merging
+    * inference reads), and the partition columns (`k=v` dirs, types
+    * inferred, appended last) from the driver-side listing of a read
+    * pinned to those data columns. Fails loudly on a dir holding no
+    * data file — the case `spark.read.parquet` itself cannot infer. */
+  private def inferSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    // Spark's hidden-file rule: `_`/`.` names are metadata, except a
+    // `_`-named partition dir (`_k=v`)
+    def visible(n: String) =
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith("."))
+    def firstFile(dir: org.apache.hadoop.fs.Path)
+        : Option[org.apache.hadoop.fs.FileStatus] = {
+      val (dirs, files) = fs.listStatus(dir)
+        .filter(st => visible(st.getPath.getName)).sortBy(_.getPath.getName)
+        .partition(_.isDirectory)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath))
+        .nextOption())
+    }
+    val file = firstFile(root).getOrElse(throw new IllegalStateException(
+      s"$path holds no parquet data file — there is no schema to record"))
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    val data = ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(
+        org.apache.spark.sql.internal.SQLConf.get))
+    spark.read.schema(data).parquet(path).schema
   }
 
   /** Commit one new version. `write` receives the base snapshot (None
@@ -127,9 +196,15 @@ private[graft] object IndexStore {
     * complete (tables, props) to record. Claim precedes all data
     * work; publish is one manifest rename. A commit that records no
     * table fails unless `allowEmpty` (a profile table whose every
-    * bucket was deleted is an empty snapshot; an index never is). */
+    * bucket was deleted is an empty snapshot; an index never is).
+    * `segmentDir(table, vdir)` is where a segment lives under
+    * `indexDir` — `vdir/table` for the index families; the profile
+    * store's bucket tables all live in their owning `vdir`. Every
+    * segment's read schema is recorded in the manifest: carried from
+    * the base snapshot, or derived from the files for a fresh one. */
   def commit(spark: SparkSession, indexDir: String, op: String,
-      allowEmpty: Boolean = false)(
+      allowEmpty: Boolean = false,
+      segmentDir: (String, String) => String = (t, v) => s"$v/$t")(
       write: (Option[Snapshot], String) =>
         (Map[String, Seq[String]], Map[String, String])): Snapshot = {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
@@ -172,12 +247,20 @@ private[graft] object IndexStore {
           s"$op: manifest props must be non-empty and whitespace-free " +
             s"(got '$k' -> '$v')")
       }
-      val body = s"version $next\n" +
-        props.toSeq.sorted.map { case (k, v) => s"prop $k $v" }
-          .map(_ + "\n").mkString +
-        tables.toSeq.sortBy(_._1)
-          .map { case (t, segs) => s"table $t ${segs.mkString(" ")}\n" }
-          .mkString
+      // a segment the base already recorded keeps its schema; a fresh
+      // one (or one re-pointed under another table) derives it here,
+      // once per segment dir
+      val derived = scala.collection.mutable.Map.empty[String, StructType]
+      val schemas = tables.toSeq.flatMap { case (t, segs) =>
+        segs.map(sv => (t, sv) ->
+          base.flatMap(_.schemas.get((t, sv))).getOrElse(
+            derived.getOrElseUpdate(segmentDir(t, sv),
+              inferSchema(spark, s"$indexDir/${segmentDir(t, sv)}"))))
+      }.toMap
+      val chain = base.map(_.chain)
+        .getOrElse(java.util.UUID.randomUUID().toString)
+      val snap = Snapshot(next, props, tables, schemas, chain)
+      val body = manifestText(snap)
       val tmp = new org.apache.hadoop.fs.Path(
         s"${manifestDir(indexDir)}/.$vname.manifest.tmp")
       val out = fs.create(tmp, true)
@@ -189,7 +272,7 @@ private[graft] object IndexStore {
         throw new ConcurrentIndexWriteException(s"$op: failed to publish $fin")
       published = true
       fs.delete(claim, false)
-      Snapshot(next, props, tables)
+      snap
     } finally if (!published) {
       // failed before publish: nothing WE wrote is referenced — drop our
       // partial data dir (never a racer's: wroteData guards the TOCTOU
@@ -320,21 +403,47 @@ private[graft] object IndexStore {
   private[api] def versionOf(name: String): Int =
     name.stripPrefix("v").takeWhile(_.isDigit).toInt
 
+  /** The manifest body: each distinct schema written once, numbered in
+    * order of first use by the (sorted) table lines. */
+  private def manifestText(snap: Snapshot): String = {
+    val tables = snap.tables.toSeq.sortBy(_._1)
+    val ids = tables.flatMap { case (t, segs) => segs.map(sv => snap.schemas((t, sv))) }
+      .distinct.zipWithIndex.toMap
+    s"version ${snap.version}\nchain ${snap.chain}\n" +
+      snap.props.toSeq.sorted.map { case (k, v) => s"prop $k $v\n" }.mkString +
+      ids.toSeq.sortBy(_._2).map { case (s, i) => s"schema $i ${s.json}\n" }
+        .mkString +
+      tables.map { case (t, segs) =>
+        s"table $t ${segs.map(sv => s"$sv:${ids(snap.schemas((t, sv)))}")
+          .mkString(" ")}\n"
+      }.mkString
+  }
+
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): Snapshot = {
     val in = fs.open(path)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+    def field(kind: String): Seq[Array[String]] =
+      lines.tail.filter(_.startsWith(s"$kind ")).map(_.split(" ", 3))
     val ver = lines.head.split(" ")(1).toInt
-    val props = lines.tail.filter(_.startsWith("prop ")).map { l =>
-      val Array(_, k, v) = l.split(" ", 3); k -> v
+    val chain = field("chain").headOption.map(_(1)).getOrElse(
+      throw new IllegalStateException(s"$path predates the schema-recording " +
+        "manifest format (no chain line) — rebuild the index"))
+    val props = field("prop").map { case Array(_, k, v) => k -> v }.toMap
+    val schemaById = field("schema").map { case Array(_, i, json) =>
+      i -> DataType.fromJson(json).asInstanceOf[StructType]
     }.toMap
-    val tables = lines.tail.filter(_.startsWith("table ")).map { l =>
+    val segs = lines.tail.filter(_.startsWith("table ")).map { l =>
       val parts = l.split(" ").toSeq
-      parts(1) -> parts.drop(2)
-    }.toMap
-    Snapshot(ver, props, tables)
+      parts(1) -> parts.drop(2).map { seg =>
+        val Array(sv, i) = seg.split(":", 2); sv -> schemaById(i)
+      }
+    }
+    Snapshot(ver, props, segs.map { case (t, ss) => t -> ss.map(_._1) }.toMap,
+      segs.flatMap { case (t, ss) => ss.map { case (sv, s) => (t, sv) -> s } }
+        .toMap, chain)
   }
 }
 

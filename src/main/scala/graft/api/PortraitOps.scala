@@ -384,26 +384,25 @@ object PortraitOps {
     val touched = neu.select(bucketOf(col(keyCol)).as("bucket")).distinct()
       .collect().map(_.getInt(0)).toSet
     require(touched.nonEmpty, "profileUpsert: empty upsert — nothing to commit")
-    val snap = IndexStore.commit(spark, tableDir, "profileUpsert") {
-        (base, vname) =>
+    val snap = IndexStore.commit(spark, tableDir, "profileUpsert",
+        segmentDir = BucketSegment) { (base, vname) =>
       // the manifest records the bucket layout; a mismatched nBuckets would
       // hash keys into the wrong dirs and silently duplicate them
       base.map(layoutOf(tableDir, _)).foreach(nb => require(nb == nBuckets,
         s"profileUpsert: table $tableDir was created with nBuckets=$nb, " +
           s"called with $nBuckets — the layouts are incompatible"))
       val baseMap = base.map(bucketMap).getOrElse(Map.empty[Int, String])
-      val oldTouched = baseMap.filter(kv => touched(kv._1))
       val merged =
-        if (oldTouched.isEmpty) neu // already key-unique, sorted, distinct
+        if (!baseMap.keySet.exists(touched)) neu // key-unique, sorted, distinct
         else
           profileMergeTags(
-            readBuckets(spark, tableDir, oldTouched).drop("bucket"),
+            readBuckets(spark, tableDir, base.get, touched).drop("bucket"),
             neu, keyCol, tagsCol)
       merged.withColumn("bucket", bucketOf(col(keyCol)))
         .write.partitionBy("bucket").parquet(s"$tableDir/$vname")
       profileManifest(baseMap ++ touched.map(_ -> vname), nBuckets)
     }
-    readBuckets(spark, tableDir, bucketMap(snap))
+    readBuckets(spark, tableDir, snap)
   }
 
   /** DELETE profiles (by key) from a [[profileUpsert]] table — the
@@ -457,21 +456,20 @@ object PortraitOps {
     val touched = ks.select(bucketOf(col(keyCol)).as("bucket")).distinct()
       .collect().map(_.getInt(0)).toSet.intersect(baseMap.keySet)
     // the no-op returns read the CURRENT snapshot
-    if (touched.isEmpty) return readBuckets(spark, tableDir, baseMap)
-    val existing = readBuckets(spark, tableDir,
-      baseMap.filter(kv => touched(kv._1)))
+    if (touched.isEmpty) return readBuckets(spark, tableDir, snap)
+    val existing = readBuckets(spark, tableDir, snap, touched)
     // pinned once: the no-op probe, the per-bucket survivor counts, and
     // the write all read this frame (curate's fan-out contract)
     val remaining = existing.join(ks, Seq(keyCol), "left_anti")
       .localCheckpoint(false)
     if (existing.join(ks, Seq(keyCol), "left_semi").isEmpty)
-      return readBuckets(spark, tableDir, baseMap) // absent — committed no-op
+      return readBuckets(spark, tableDir, snap) // absent — committed no-op
     val live = remaining.groupBy("bucket").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val emptied = touched.filter(b => live.getOrElse(b, 0L) == 0L)
     // an all-keys delete commits an EMPTY snapshot (no bucket table)
     val out = IndexStore.commit(spark, tableDir, "profileDelete",
-        allowEmpty = true) { (base, vname) =>
+        allowEmpty = true, segmentDir = BucketSegment) { (base, vname) =>
       // the survivors above derive from `snap`: a writer that published
       // since must fail this delete loudly, not be overwritten by it
       if (!base.exists(_.version == snap.version))
@@ -484,7 +482,7 @@ object PortraitOps {
         nBuckets)
     }
     if (out.tables.isEmpty) remaining // zero rows, correct schema
-    else readBuckets(spark, tableDir, bucketMap(out))
+    else readBuckets(spark, tableDir, out)
   }
 
   /** Read the CURRENT committed snapshot of a [[profileUpsert]] table:
@@ -494,10 +492,10 @@ object PortraitOps {
     * it. Snapshot-isolated against a concurrent upsert by construction
     * (the manifest is the atomic commit point). */
   def profileRead(spark: SparkSession, tableDir: String): DataFrame =
-    readBuckets(spark, tableDir, bucketMap(
+    readBuckets(spark, tableDir,
       IndexStore.resolve(spark, tableDir).getOrElse(
         throw new IllegalStateException(
-          s"profileRead: no committed profile snapshot at $tableDir"))))
+          s"profileRead: no committed profile snapshot at $tableDir")))
 
   /** Drop everything the RETAINED snapshots no longer reference —
     * [[IndexStore.vacuum]] on the profile table: version dirs
@@ -520,6 +518,11 @@ object PortraitOps {
   private def profileBucket(c: Column, nBuckets: Int): Column =
     pmod(xxhash64(c), lit(nBuckets)).cast("int")
 
+  /** Where a `bucket=<b>` table's segment lives: the whole owning
+    * version dir (read with bucket pruning), not its `bucket=<b>`
+    * subdir — so the recorded schema carries the `bucket` column. */
+  private val BucketSegment: (String, String) => String = (_, v) => v
+
   /** A profile snapshot's bucket → owning version-dir map: each
     * `bucket=<b>` table has exactly one segment. */
   private def bucketMap(snap: IndexStore.Snapshot): Map[Int, String] =
@@ -538,18 +541,23 @@ object PortraitOps {
       s"$tableDir: manifest v${snap.version} records no n_buckets — not a " +
         "profile table")).toInt
 
-  /** Union of per-version bucket reads for one bucket map. An EMPTY map
-    * (a [[profileDelete]] erased every profile) fails loudly: with no
-    * live version dir there is no schema to produce an empty frame from
-    * — drop the table dir, or upsert to restart the chain (the next
-    * upsert writes fresh buckets as day 0). */
+  /** Union of per-version bucket reads over a snapshot's live buckets
+    * that `keep` selects, each version dir read with its recorded
+    * schema. An EMPTY selection (a [[profileDelete]] erased every
+    * profile) fails loudly: with no live version dir there is no
+    * schema to produce an empty frame from — drop the table dir, or
+    * upsert to restart the chain (the next upsert writes fresh buckets
+    * as day 0). */
   private def readBuckets(spark: SparkSession, tableDir: String,
-      buckets: Map[Int, String]): DataFrame = {
+      snap: IndexStore.Snapshot, keep: Int => Boolean = _ => true)
+      : DataFrame = {
+    val buckets = bucketMap(snap).filter(kv => keep(kv._1))
     if (buckets.isEmpty) throw new IllegalStateException(
       s"profile table $tableDir holds no live buckets (every profile " +
         "was deleted) — drop the table directory, or upsert to restart")
     buckets.groupBy(_._2).toSeq.sortBy(_._1).map { case (vdir, bs) =>
-      spark.read.parquet(s"$tableDir/$vdir")
+      spark.read.schema(snap.schema(s"bucket=${bs.keys.head}", vdir))
+        .parquet(s"$tableDir/$vdir")
         .filter(col("bucket").isin(bs.keys.toSeq: _*))
     }.reduce(_.unionByName(_))
   }

@@ -112,6 +112,26 @@ abstract class SparkTestBase extends AnyFunSuite
   lazy val spark: SparkSession = SparkTestBase.spark
   lazy val fx: String = SparkTestBase.fixtureDir
 
+  /** `body`'s result and the number of Spark jobs started while it ran
+    * — every job on the shared context, which is exact because suites
+    * run one at a time. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.GraftTestBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   // Hang insurance, not a performance bound: a one-in-many-runs AQE
   // event-wait wedge was observed parking a trivial one-row parquet
   // write forever (AdaptiveSparkPlanExec.withFinalPlanUpdate blocking
