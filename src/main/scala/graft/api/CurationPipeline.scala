@@ -343,10 +343,13 @@ object CurationPipeline {
     // and the result is pinned like the normal path: the sink writes a
     // materialized checkpoint instead of lazily re-reading snapshot
     // segments a concurrent vacuum could reclaim.
-    val sk = GraftOps.indexSketch(prefiltered, idCol, textCol, indexDir)
+    // sketched in the shape of the snapshot the dedup probes — one
+    // resolve for both, so a concurrent rebuild cannot split them
+    val probeSnap = fPre.getOrElse(snap)
+    val sk = GraftOps.indexSketch(prefiltered, idCol, textCol, probeSnap)
     val survivors = GraftOps.dedupNearSketched(
       prefiltered, idCol, sk, indexDir, minPct, maxBucketSize,
-      Some(fPre.getOrElse(snap)))
+      Some(probeSnap))
     if (!appendToIndex && fPre.isEmpty && dPre.isEmpty && sPre.isEmpty)
       survivors
     else {

@@ -226,7 +226,7 @@ object GraftOps {
           .as("n_removed"))
   }
 
-  private val GramTables = Seq("meta", "grams")
+  private val GramTables = Seq("grams")
 
   /** A batch's per-window-hash count deltas, ready for one gram-index
     * segment: (h, cnt, bucket). Counting needs no caller doc ids — a
@@ -269,22 +269,21 @@ object GraftOps {
     * Bucketed by pmod(h, nBuckets) like the digest index: a probing
     * batch prunes history to the buckets its own windows hash into.
     * Segment rows are (h, cnt, bucket) — 20 bytes of fixed-width data
-    * per distinct window, ~3 orders of magnitude under the text. */
+    * per distinct window, ~3 orders of magnitude under the text; the
+    * layout rides as the `k` and `n_buckets` props. */
   def gramIndexBuild(corpus: DataFrame, textCol: String, indexDir: String,
       k: Int = 8, nBuckets: Int = 1024): Unit = {
     require(k >= 2, s"k must be >= 2 (got $k; k = 1 is token frequency)")
     require(nBuckets >= 1 && nBuckets <= (1 << 20),
       s"nBuckets must be in 1..${1 << 20} (got $nBuckets)")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    IndexStore.commit(spark, indexDir, "gramIndexBuild") { (_, v) =>
-      Seq((k, nBuckets)).toDF("k", "n_buckets")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
-      writeBucketedOrEmpty(
-        gramCounts(corpus, textCol, k, nBuckets, "gramIndexBuild",
-          negate = false),
-        s"$indexDir/$v/grams")
-      (GramTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+    IndexStore.commit(corpus.sparkSession, indexDir, "gramIndexBuild") {
+      (_, v) =>
+        writeBucketedOrEmpty(
+          gramCounts(corpus, textCol, k, nBuckets, "gramIndexBuild",
+            negate = false),
+          s"$indexDir/$v/grams")
+        (GramTables.map(_ -> Seq(v)).toMap,
+          Map("k" -> k.toString, "n_buckets" -> nBuckets.toString))
     }
     ()
   }
@@ -312,10 +311,9 @@ object GraftOps {
     IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"$op: no index at $indexDir — build one with gramIndexBuild first"))
-      val metaRow = metaRowOf(spark, indexDir, base)
       writeBucketedOrEmpty(
-        gramCounts(batch, textCol, metaRow.getInt(0), metaRow.getInt(1), op,
-          negate),
+        gramCounts(batch, textCol, base.prop("k").toInt,
+          base.prop("n_buckets").toInt, op, negate),
         s"$indexDir/$v/grams")
       (base.tables + ("grams" -> (base.tables("grams") :+ v)), base.props)
     }
@@ -331,10 +329,8 @@ object GraftOps {
       (baseOpt, v) =>
         val base = baseOpt.getOrElse(throw new IllegalArgumentException(
           s"gramIndexCompact: no index at $indexDir"))
-        val metaDf = IndexStore.readTable(spark, indexDir, base, "meta")
-        metaDf.coalesce(1).write.parquet(s"$indexDir/$v/meta")
         // bucket is a pure function of h, so any per-group representative
-        // (max) reproduces it without re-deriving from meta
+        // (max) reproduces it without re-deriving it from the layout
         writeBucketedOrEmpty(
           IndexStore.readTable(spark, indexDir, base, "grams")
             .groupBy("h")
@@ -377,9 +373,8 @@ object GraftOps {
       throw new IllegalArgumentException(
         s"substringScrubAgainstCorpus: no index at $indexDir — build one " +
           "with gramIndexBuild first"))
-    val metaRow = metaRowOf(spark, indexDir, snap)
-    val k = metaRow.getInt(0)
-    val nBuckets = metaRow.getInt(1)
+    val k = snap.prop("k").toInt
+    val nBuckets = snap.prop("n_buckets").toInt
     val toks = scrubTokens(batch, idCol, textCol,
       "substringScrubAgainstCorpus")
     val grams = gramWindows(toks, k).localCheckpoint(false)
@@ -618,9 +613,9 @@ object GraftOps {
     * consistent tables; concurrent WRITERS fail loudly at the claim,
     * before any work ([[ConcurrentIndexWriteException]]). Reclaim
     * superseded versions with [[indexVacuum]] once no reader holds
-    * them. Logical tables:
-    *  - `meta`  — one row (n_hashes, bands): the sketch shape,
-    *    so search/append always hash exactly as the build did;
+    * them. The sketch shape rides as the `n_hashes` and `bands` props,
+    * so search/append always hash exactly as the build did. Logical
+    * tables:
     *  - `docs`  — (doc_id, sz, tk, sigs): per-doc token set +
     *    signatures (the verify side);
     *  - `bands` — (doc_id, sz, band, sig): the exploded band
@@ -628,25 +623,22 @@ object GraftOps {
     *    prefilter prunes candidates before any verify).
     * The band table derives from the WRITTEN docs parquet, so the sketch
     * aggregation runs once and the second pass re-reads compact columns.
-    * A REBUILD over a live index is just the next version owning all
-    * three tables — in-flight readers keep the old snapshot, and the
+    * A REBUILD over a live index is just the next version owning both
+    * tables — in-flight readers keep the old snapshot, and the
     * replay watermark (see [[CurationPipeline.curateIncremental]])
     * resets with the fresh index. */
   def fingerprintBuild(corpus: DataFrame, idCol: String, textCol: String,
       indexDir: String, nHashes: Int = 32, bands: Int = 8): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     IndexStore.commit(spark, indexDir, "fingerprintBuild") { (_, v) =>
-      inParallel(
-        () => Seq((nHashes, bands)).toDF("n_hashes", "bands")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta"),
-        () => minhashDocSketch(corpus, idCol, textCol, nHashes, bands)
-          .write.parquet(s"$indexDir/$v/docs"))
+      minhashDocSketch(corpus, idCol, textCol, nHashes, bands)
+        .write.parquet(s"$indexDir/$v/docs")
       IndexStore.readWritten(spark, s"$indexDir/$v/docs")
         .select(col("doc_id"), col("sz"),
           posexplode(col("sigs")).as(Seq("band", "sig")))
         .write.parquet(s"$indexDir/$v/bands")
-      (BandTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (BandTables.map(_ -> Seq(v)).toMap,
+        Map("n_hashes" -> nHashes.toString, "bands" -> bands.toString))
     }
     ()
   }
@@ -663,22 +655,25 @@ object GraftOps {
     * together, atomically — a concurrent search sees both or neither. */
   def fingerprintAppend(fresh: DataFrame, idCol: String, textCol: String,
       indexDir: String): Unit =
-    fingerprintAppendSketch(indexSketch(fresh, idCol, textCol, indexDir),
+    fingerprintAppendSketch(indexSketch(fresh, idCol, textCol,
+        indexSnapshot(fresh.sparkSession, indexDir, "fingerprint",
+          "fingerprintBuild")),
       indexDir)
 
-  /** A batch sketched with an index's recorded shape, materialized once
-    * behind a lazy local checkpoint — the shareable form both the dedup
-    * check and the append consume (curateIncremental computes it ONCE
-    * and hands it to both; the sketch aggregation is the incremental
-    * step's heaviest job, the exact duplication class the q113 fix
-    * targets). */
+  /** A batch sketched with the shape snapshot `snap` records,
+    * materialized once behind a lazy local checkpoint — the shareable
+    * form both the dedup check and the append consume
+    * (curateIncremental computes it ONCE and hands it to both; the
+    * sketch aggregation is the incremental step's heaviest job, the
+    * exact duplication class the q113 fix targets). `snap` must be the
+    * snapshot the caller probes with: a rebuild with another shape
+    * committing after it cannot split the batch's shape from the
+    * history it is compared against. */
   private[api] def indexSketch(df: DataFrame, idCol: String,
-      textCol: String, indexDir: String): DataFrame = {
-    val meta = fingerprintMeta(df.sparkSession, indexDir)
-    minhashDocSketch(df, idCol, textCol, meta.getInt(0), meta.getInt(1),
-        spread = false)
+      textCol: String, snap: IndexStore.Snapshot): DataFrame =
+    minhashDocSketch(df, idCol, textCol, snap.prop("n_hashes").toInt,
+        snap.prop("bands").toInt, spread = false)
       .localCheckpoint(false)
-  }
 
   /** [[fingerprintAppend]] over a prebuilt [[indexSketch]]. `batchId`
     * (from [[CurationPipeline.curateIncremental]]'s foreachBatch slot)
@@ -726,7 +721,7 @@ object GraftOps {
 
   /** The band-index logical tables (fingerprint and SRP share the
     * layout; IVF has its own pair). */
-  private val BandTables = Seq("meta", "docs", "bands")
+  private val BandTables = Seq("docs", "bands")
 
   /** RETRACT documents (by id) from a [[fingerprintBuild]] index —
     * [[digestIndexRetract]]'s near-dup twin, consuming the same
@@ -871,15 +866,6 @@ object GraftOps {
         else s"no $what index at $indexDir — build one with $builder first")
     }
 
-  /** The index's recorded sketch shape (from the latest snapshot; the
-    * shape is immutable across appends/compacts, so any snapshot
-    * agrees). */
-  private def fingerprintMeta(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): org.apache.spark.sql.Row =
-    IndexStore.readTable(spark, indexDir,
-      indexSnapshot(spark, indexDir, "fingerprint", "fingerprintBuild"),
-      "meta").head()
-
   /** Compact a [[fingerprintBuild]] index: every [[fingerprintAppend]]
     * adds at least one segment (≥ 1 parquet file) per table, so a
     * long-running micro-batch ingest accretes thousands of small files
@@ -917,11 +903,8 @@ object GraftOps {
       // that returns probes to zero tombstone overhead; the LIVE row
       // set is unchanged (spec-pinned)
       BandTables.foreach { t =>
-        val df =
-          if (t == "meta") IndexStore.readTable(spark, indexDir, base, t)
-          else liveIndexTable(spark, indexDir, base, t, keyCol)
-        (if (t == "meta") df.coalesce(1) else df.repartition(filesPerTable))
-          .write.parquet(s"$indexDir/$v/$t")
+        liveIndexTable(spark, indexDir, base, t, keyCol)
+          .repartition(filesPerTable).write.parquet(s"$indexDir/$v/$t")
       }
       (BandTables.map(_ -> Seq(v)).toMap, base.props)
     }
@@ -1014,7 +997,7 @@ object GraftOps {
   }
 
   /** The digest-index logical tables ([[digestIndexBuild]]). */
-  private val DigestTables = Seq("meta", "digests")
+  private val DigestTables = Seq("digests")
 
   /** The digest index's partition key: the md5 digest's leading 6 hex
     * chars (24 bits) mod `nBuckets` — a pure function of the digest, so
@@ -1037,9 +1020,10 @@ object GraftOps {
     * history. Committed through the [[IndexStore]] versioned-snapshot
     * protocol (atomic publish, snapshot-isolated readers, loud
     * concurrent-writer failure, [[indexVacuum]] reclaim — the band
-    * families' exact lifecycle). Logical tables:
-    *  - `meta`    — one row (n_buckets): the partition layout, so every
-    *    later append/probe buckets exactly as the build did;
+    * families' exact lifecycle). The partition layout rides as the
+    * `n_buckets` prop (plus `bloom_fpp` when the sidecar is on), so
+    * every later append/probe buckets exactly as the build did. Logical
+    * tables:
     *  - `digests` — (digest, last_write) partitioned by `bucket = `
     *    leading 24 bits of the digest mod n_buckets; `last_write` is
     *    the version of the commit that wrote the row — persisted as
@@ -1076,11 +1060,7 @@ object GraftOps {
     bloomFpp.foreach(f => require(f > 0 && f < 1,
       s"bloomFpp must be in (0, 1) (got $f)"))
     val spark = corpus.sparkSession
-    import spark.implicits._
     IndexStore.commit(spark, indexDir, "digestIndexBuild") { (_, v) =>
-      Seq((nBuckets, bloomFpp.map(Double.box).orNull))
-        .toDF("n_buckets", "bloom_fpp")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
       // null text has no digest and can never match an anti-join probe
       // (the raw dedupAgainstCorpus's convention exactly) — don't store it.
       // `last_write` is the digest's PERSISTED age (the version of the
@@ -1102,7 +1082,8 @@ object GraftOps {
         writeBloomSegment(dg, f, s"$indexDir/$v/blooms"))
       ((DigestTables ++ bloomFpp.map(_ => "blooms"))
         .map(_ -> Seq(v)).toMap,
-        Map.empty[String, String])
+        Map("n_buckets" -> nBuckets.toString) ++
+          bloomFpp.map(f => "bloom_fpp" -> f.toString))
     }
     ()
   }
@@ -1146,9 +1127,8 @@ object GraftOps {
         // its rows under the winner's layout, or the pruned probe and
         // compact scans would silently miss them (clusterIndexAppend's
         // rule)
-        val metaRow = metaRowOf(spark, indexDir, base)
-        val nBuckets = metaRow.getInt(0)
-        val fppOpt = bloomFppOf(metaRow)
+        val nBuckets = base.prop("n_buckets").toInt
+        val fppOpt = base.props.get("bloom_fpp").map(_.toDouble)
         val dgb = dg.filter(col("digest").isNotNull)
           .withColumn("last_write", lit(IndexStore.versionOf(v)))
           .withColumn("bucket", digestBucket(col("digest"), nBuckets))
@@ -1244,7 +1224,7 @@ object GraftOps {
         // append): tombstones bucketed under a stale layout after a
         // concurrent rebuild would be invisible to the pruned
         // probe/compact scans — retracted content would keep gating
-        val nBuckets = metaRowOf(spark, indexDir, base).getInt(0)
+        val nBuckets = base.prop("n_buckets").toInt
         dgClean
           .withColumn("bucket", digestBucket(col("digest"), nBuckets))
           .transform(bucketExchange)
@@ -1516,14 +1496,6 @@ object GraftOps {
       path: String): Unit =
     bloomSegment(dg, fpp).coalesce(1).write.parquet(path)
 
-  /** The `bloom_fpp` knob recorded in a digest index's meta row, if the
-    * index was built with the Bloom sidecar (older/plain indexes have
-    * no such column — sidecar off). */
-  private def bloomFppOf(metaRow: org.apache.spark.sql.Row): Option[Double] =
-    if (!metaRow.schema.fieldNames.contains("bloom_fpp")) None
-    else Option(metaRow.getAs[java.lang.Double]("bloom_fpp"))
-      .map(_.doubleValue)
-
   /** Probe-side guard: a batch's Bloom pre-filter collects the TOUCHED
     * buckets' filters to the driver (bounded metadata, like IVF's
     * probed centroids); past this many bytes the probe falls back to
@@ -1579,9 +1551,7 @@ object GraftOps {
   private[api] def digestAntiJoin(fresh: DataFrame, textCol: String,
       indexDir: String, snap: IndexStore.Snapshot): DataFrame = {
     val spark = fresh.sparkSession
-    val metaRow =
-      metaRowOf(spark, indexDir, snap)
-    val nBuckets = metaRow.getInt(0)
+    val nBuckets = snap.prop("n_buckets").toInt
     // null text digests to null and matches nothing — not a bucket probe
     val touched = fresh
       .select(digestBucket(md5(col(textCol)), nBuckets).as("b"))
@@ -1610,7 +1580,7 @@ object GraftOps {
     // skips the scan; only buckets with ≥1 HIT are read at all —
     // mostly-novel batches (the ingest steady state) stop paying for
     // history's touched slice.
-    val bloomable = bloomFppOf(metaRow).isDefined &&
+    val bloomable = snap.props.contains("bloom_fpp") &&
       snap.tables.get("blooms").contains(snap.tables("digests"))
     val filters: Map[Int, Array[org.apache.spark.util.sketch.BloomFilter]] =
       if (!bloomable) Map.empty
@@ -1738,9 +1708,7 @@ object GraftOps {
             "would age out (non-digest commits like retracts advance " +
             "the version chain); to wipe the index, rebuild it instead")
       }
-      val metaDf = IndexStore.readTable(spark, indexDir, base, "meta")
-      metaDf.coalesce(1).write.parquet(s"$indexDir/$v/meta")
-      val fppOpt = bloomFppOf(metaDf.head())
+      val fppOpt = base.props.get("bloom_fpp").map(_.toDouble)
       val tagged =
         IndexStore.readTableTagged(spark, indexDir, base, "digests", "__seg")
       val live =
@@ -1845,10 +1813,14 @@ object GraftOps {
   def dedupNearAgainstCorpus(fresh: DataFrame, idCol: String,
       textCol: String, indexDir: String, minPct: Int = 80,
       maxBucketSize: Option[Int] = None,
-      stageKey: Option[String] = None): DataFrame =
-    dedupNearSketched(fresh, idCol,
-      indexSketch(fresh, idCol, textCol, indexDir), indexDir, minPct,
-      maxBucketSize, stageKey = stageKey)
+      stageKey: Option[String] = None): DataFrame = {
+    // ONE resolve: the sketch shape and the probed history come from
+    // the same snapshot
+    val snap = indexSnapshot(fresh.sparkSession, indexDir, "fingerprint",
+      "fingerprintBuild")
+    dedupNearSketched(fresh, idCol, indexSketch(fresh, idCol, textCol, snap),
+      indexDir, minPct, maxBucketSize, Some(snap), stageKey)
+  }
 
   /** [[dedupNearAgainstCorpus]] over a prebuilt [[indexSketch]] of
     * `fresh` — the sharing point curateIncremental uses so the dedup
@@ -1915,14 +1887,14 @@ object GraftOps {
         // agreeing band may sit in a dropped hot bucket while a later
         // band keeps the pair alive — so the capped path keeps the
         // distinct.
-        // bands count from the PINNED snapshot's meta, not a fresh
+        // bands count from the PINNED snapshot's props, not a fresh
         // latest-manifest resolve: the function's one-snapshot
         // invariant (and the replay override) must cover this read too
         // — a concurrent rebuild with fewer bands committing between
         // two resolves would make the fold shorter than the sigs
         // arrays actually read, silently dropping any pair whose only
         // agreeing band sits past the new count
-        val nBands = metaRowOf(spark, indexDir, snap).getInt(1)
+        val nBands = snap.prop("bands").toInt
         val firstAgree =
           firstAgreeingBand(nBands, col("__fsg"), col("__osg"))
         joined.select("fid", "oid", "band", "hist")
@@ -2375,7 +2347,7 @@ object GraftOps {
     * over `nBits` hyperplane dot products). The ±1 hyperplanes derive
     * deterministically from (seed, nBits, dim) — pure per vector and
     * reproducible from parameters alone, so a persisted index needs only
-    * the four numbers in its meta, never the planes. Wrong-width rows
+    * the four numbers in its props, never the planes. Wrong-width rows
     * fail loudly (`op` names the caller). Requires graft_dot
     * (GraftExtensions). */
   private def srpSketch(emb: DataFrame, idCol: String, vecCol: String,
@@ -2411,30 +2383,26 @@ object GraftOps {
     * against each other. Layout mirrors the fingerprint index — the
     * same [[IndexStore]] versioned-snapshot commit protocol (atomic
     * publish, loud concurrent-writer claim failure, [[indexVacuum]]
-    * reclaim) over the same three logical tables:
-    * `meta` (dim, n_bits, bands, seed), `docs` (vec_id, nrm, emb,
-    * sigs — the verify side), `bands` (vec_id, band, sig — the
-    * candidate-join side). Compact with [[srpIndexCompact]] when
-    * appends accrete segments. Requires graft_dot
-    * (GraftExtensions). */
+    * reclaim) over the same two logical tables: `docs` (vec_id, nrm,
+    * emb, sigs — the verify side) and `bands` (vec_id, band, sig — the
+    * candidate-join side), with the sketch parameters as the `dim`,
+    * `n_bits`, `bands` and `seed` props. Compact with
+    * [[srpIndexCompact]] when appends accrete segments. Requires
+    * graft_dot (GraftExtensions). */
   def srpIndexBuild(emb: DataFrame, idCol: String, vecCol: String,
       indexDir: String, dim: Int, nBits: Int = 32, bands: Int = 8,
       seed: Long = 42L): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
     IndexStore.commit(spark, indexDir, "srpIndexBuild") { (_, v) =>
-      inParallel(
-        () => Seq((dim, nBits, bands, seed))
-          .toDF("dim", "n_bits", "bands", "seed")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta"),
-        () => srpSketch(emb, idCol, vecCol, dim, nBits, bands, seed,
-            "srpIndexBuild")
-          .select(col("vec_id"), col("nrm"), col("emb"), col("sigs"))
-          .write.parquet(s"$indexDir/$v/docs"))
+      srpSketch(emb, idCol, vecCol, dim, nBits, bands, seed, "srpIndexBuild")
+        .select(col("vec_id"), col("nrm"), col("emb"), col("sigs"))
+        .write.parquet(s"$indexDir/$v/docs")
       IndexStore.readWritten(spark, s"$indexDir/$v/docs")
         .select(col("vec_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
         .write.parquet(s"$indexDir/$v/bands")
-      (BandTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (BandTables.map(_ -> Seq(v)).toMap,
+        Map("dim" -> dim.toString, "n_bits" -> nBits.toString,
+          "bands" -> bands.toString, "seed" -> seed.toString))
     }
     ()
   }
@@ -2447,22 +2415,24 @@ object GraftOps {
   def srpIndexAppend(fresh: DataFrame, idCol: String, vecCol: String,
       indexDir: String): Unit =
     srpIndexAppendSketch(
-      srpIndexSketch(fresh, idCol, vecCol, indexDir, "srpIndexAppend"),
+      srpIndexSketch(fresh, idCol, vecCol,
+        indexSnapshot(fresh.sparkSession, indexDir, "SRP embedding",
+          "srpIndexBuild"), "srpIndexAppend"),
       indexDir)
 
-  /** A batch SRP-sketched with an index's recorded parameters,
+  /** A batch SRP-sketched with the parameters snapshot `snap` records,
     * materialized once behind a lazy local checkpoint — [[indexSketch]]'s
-    * dense-vector twin ([[dedupEmbAndAppend]] computes it ONCE for the
-    * dedup check and the append; the nBits projection pass is the
+    * dense-vector twin, with the same rule that `snap` is the snapshot
+    * the caller probes with ([[dedupEmbAndAppend]] computes it ONCE for
+    * the dedup check and the append; the nBits projection pass is the
     * step's heaviest job). */
   private[api] def srpIndexSketch(df: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, op: String): DataFrame = {
-    val m = srpIndexMeta(df.sparkSession, indexDir)
-    srpSketch(df, idCol, vecCol, m.getInt(0), m.getInt(1),
-        m.getInt(2), m.getLong(3), op)
+      vecCol: String, snap: IndexStore.Snapshot, op: String): DataFrame =
+    srpSketch(df, idCol, vecCol, snap.prop("dim").toInt,
+        snap.prop("n_bits").toInt, snap.prop("bands").toInt,
+        snap.prop("seed").toLong, op)
       .select(col("vec_id"), col("nrm"), col("emb"), col("sigs"))
       .localCheckpoint(false)
-  }
 
   /** [[srpIndexAppend]] over a prebuilt [[srpIndexSketch]] — the same
     * atomic [[IndexStore]] commit (and optional replay watermark) as
@@ -2486,17 +2456,19 @@ object GraftOps {
     val spark = fresh.sparkSession
     val snap = indexSnapshot(spark, indexDir, "SRP embedding",
       "srpIndexBuild")
-    val sk = srpIndexSketch(fresh, idCol, vecCol, indexDir,
+    val pre = replayBase(spark, indexDir, snap, batchId, "dedupEmbAndAppend")
+    // sketched in the shape of the snapshot the dedup probes
+    val sk = srpIndexSketch(fresh, idCol, vecCol, pre.getOrElse(snap),
       "dedupEmbAndAppend")
-    replayBase(spark, indexDir, snap, batchId, "dedupEmbAndAppend") match {
-      case Some(pre) =>
+    pre match {
+      case Some(_) =>
         // replay: identical survivors vs the pre-append history, no
         // second append — the batch's sketches are already indexed.
         // Pinned like the normal path, so the sink writes a
         // materialized result, not a lazy read of the pre-append
         // snapshot's segments (curateIncremental's replay contract)
         dedupEmbSketched(fresh, idCol, sk, indexDir, minCosine,
-          maxBucketSize, Some(pre)).localCheckpoint(true)
+          maxBucketSize, pre).localCheckpoint(true)
       case None =>
         val pinned = dedupEmbSketched(fresh, idCol, sk, indexDir, minCosine,
           maxBucketSize, Some(snap)).localCheckpoint(true)
@@ -2525,10 +2497,13 @@ object GraftOps {
     * None = exact behavior). Requires graft_dot (GraftExtensions). */
   def dedupEmbAgainstCorpus(fresh: DataFrame, idCol: String, vecCol: String,
       indexDir: String, minCosine: Double,
-      maxBucketSize: Option[Int] = None): DataFrame =
+      maxBucketSize: Option[Int] = None): DataFrame = {
+    val snap = indexSnapshot(fresh.sparkSession, indexDir, "SRP embedding",
+      "srpIndexBuild")
     dedupEmbSketched(fresh, idCol,
-      srpIndexSketch(fresh, idCol, vecCol, indexDir, "dedupEmbAgainstCorpus"),
-      indexDir, minCosine, maxBucketSize)
+      srpIndexSketch(fresh, idCol, vecCol, snap, "dedupEmbAgainstCorpus"),
+      indexDir, minCosine, maxBucketSize, Some(snap))
+  }
 
   /** [[dedupEmbAgainstCorpus]] over a prebuilt [[srpIndexSketch]] of
     * `fresh` — the sharing point [[dedupEmbAndAppend]] uses. */
@@ -2599,13 +2574,6 @@ object GraftOps {
         .select("band", "sig")
       bands.join(hot, Seq("band", "sig"), "left_anti")
   }
-
-  /** The SRP index's recorded parameters, failing loudly when absent. */
-  private def srpIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): org.apache.spark.sql.Row =
-    IndexStore.readTable(spark, indexDir,
-      indexSnapshot(spark, indexDir, "SRP embedding", "srpIndexBuild"),
-      "meta").head()
 
   def srpNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       minCosine: Double, dim: Int, nBits: Int = 32, bands: Int = 8,
@@ -2790,7 +2758,7 @@ object GraftOps {
       .orderBy("qid", "rn")
   }
 
-  private val Bm25Tables = Seq("meta", "postings", "stats", "docs")
+  private val Bm25Tables = Seq("postings", "stats", "docs")
 
   /** A batch's posting-list rows, ready for one BM25-index segment:
     * (term, did, tf, dl, bucket). Everything is ADDITIVE (the gram
@@ -2901,16 +2869,15 @@ object GraftOps {
     * The spec-pinned law that makes the probe trustworthy:
     * [[bm25AgainstCorpus]](Q | index) ≡ [[bm25TopK]](C, Q) where C is
     * the net corpus after any build/append/retract/compact sequence —
-    * scores equal to the 4dp boundary, ranks equal exactly. */
+    * scores equal to the 4dp boundary, ranks equal exactly. Tables:
+    * `postings`, `stats`, `docs`; the bucket count rides as the
+    * `n_buckets` prop. */
   def bm25IndexBuild(corpus: DataFrame, idCol: String, textCol: String,
       indexDir: String, nBuckets: Int = 1024): Unit = {
     require(nBuckets >= 1 && nBuckets <= (1 << 20),
       s"nBuckets must be in 1..${1 << 20} (got $nBuckets)")
     val spark = corpus.sparkSession
-    import spark.implicits._
     IndexStore.commit(spark, indexDir, "bm25IndexBuild") { (_, v) =>
-      Seq(nBuckets).toDF("n_buckets")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
       val pinned = writeBucketedOrEmpty(
         bm25Postings(corpus, idCol, textCol, nBuckets, "bm25IndexBuild",
           negate = false),
@@ -2922,7 +2889,8 @@ object GraftOps {
           .coalesce(1).write.parquet(s"$indexDir/$v/stats"),
         () => bm25DocsSidecar(pinned)
           .coalesce(1).write.parquet(s"$indexDir/$v/docs"))
-      (Bm25Tables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (Bm25Tables.map(_ -> Seq(v)).toMap,
+        Map("n_buckets" -> nBuckets.toString))
     }
     ()
   }
@@ -2988,11 +2956,9 @@ object GraftOps {
         s"$op: no index at $indexDir — build one with bm25IndexBuild first"))
       skipIfReplayed(base, batchId, op, negate)
       requireBm25Sidecar(base, indexDir, op)
-      val nBuckets =
-        metaRowOf(spark, indexDir, base).getInt(0)
       val pinned = writeBucketedOrEmpty(
         bm25Postings(requireUniqueIds(batch, idCol, op), idCol, textCol,
-          nBuckets, op, negate),
+          base.prop("n_buckets").toInt, op, negate),
         s"$indexDir/$v/postings")
       inParallel(
         () => bm25StatsFromPostings(pinned)
@@ -3018,8 +2984,6 @@ object GraftOps {
       (baseOpt, v) =>
         val base = baseOpt.getOrElse(throw new IllegalArgumentException(
           s"bm25IndexCompact: no index at $indexDir"))
-        IndexStore.readTable(spark, indexDir, base, "meta")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta")
         // bucket is a pure function of term — any per-group representative
         // (max) reproduces it without re-hashing. Two BEST-EFFORT checks
         // on the append contract (live doc ids unique across appends):
@@ -3123,10 +3087,10 @@ object GraftOps {
       throw new IllegalArgumentException(
         s"bm25AgainstCorpus: no index at $indexDir — build one with " +
           "bm25IndexBuild first"))
-    // meta + folded stats memoized per committed version (idxMemo — the
-    // serving-path convention): both are version-pinned scalars, so a
-    // repeat probe of an unmoved index pays zero metadata jobs
-    val nBuckets = metaRowOf(spark, indexDir, snap).getInt(0)
+    // folded stats memoized per committed version (idxMemo — the
+    // serving-path convention): version-pinned scalars, so a repeat
+    // probe of an unmoved index pays zero metadata jobs
+    val nBuckets = snap.prop("n_buckets").toInt
     val (nDocs, sumDl) =
       idxMemo(spark, indexDir, snap.chain, snap.version, "stats") {
         // one row per segment: summed driver-side, one job and no
@@ -3885,11 +3849,11 @@ object GraftOps {
     * convention, the persisted-index twin of TextOps' doc-components
     * memo): every probe of a persisted index collects the same bounded
     * driver-side quantizer metadata — centroids (nLists rows),
-    * PQ codebooks (m × ksub rows), the meta row, bm25's two stats
-    * scalars — which is correct but the wrong shape for a query-serving
-    * deployment: ~4 small Spark jobs per call, re-read although the
-    * index version has not moved (r15 VERDICT residual (b), measured as
-    * most of q146:search's 1.41 s). Entries are keyed by (session,
+    * PQ codebooks (m × ksub rows), bm25's two stats scalars — which is
+    * correct but the wrong shape for a query-serving deployment: ~4
+    * small Spark jobs per call, re-read although the index version has
+    * not moved (r15 VERDICT residual (b), measured as most of
+    * q146:search's 1.41 s). Entries are keyed by (session,
     * indexDir, version CHAIN, COMMITTED VERSION, table) — a fresh
     * commit is a fresh version, and a dir deleted and rebuilt restarts
     * its versions under a fresh chain ([[IndexStore]]), so staleness
@@ -3934,26 +3898,6 @@ object GraftOps {
   }
   private[graft] def idxMetaClear(): Unit =
     idxMetaCache.synchronized(idxMetaCache.clear())
-
-  /** A snapshot's meta-table head row, memoized by its OWNING SEGMENT
-    * DIR within the version chain (immutable once written; appends
-    * carry the meta segment list unchanged, so — unlike a per-version
-    * key — the memo hits across a whole append/retract chain): every
-    * lifecycle mutation and probe otherwise pays one parquet-read job
-    * per commit for a row that only a rebuild/compact can change.
-    * Multi-segment meta (no current layout produces one) reads plain,
-    * uncached. */
-  private[api] def metaRowOf(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, snap: IndexStore.Snapshot)
-      : org.apache.spark.sql.Row = {
-    val segs = snap.tables.getOrElse("meta", Seq.empty)
-    if (segs.size != 1)
-      IndexStore.readTable(spark, indexDir, snap, "meta").head()
-    else idxMemo(spark, indexDir, snap.chain, IndexStore.versionOf(segs.head),
-        "metarow") {
-      IndexStore.readTable(spark, indexDir, snap, "meta").head()
-    }
-  }
 
   /** A PREPARED probe side: the canonicalized query plan it was built
     * from (verified on every hit — a hash key alone could collide),
@@ -4083,12 +4027,11 @@ object GraftOps {
   }
 
   /** The IVF-PQ logical tables ([[ivfPqBuild]]). */
-  private val IvfPqTables =
-    Seq("meta", "centroids", "codebooks", "corpus")
+  private val IvfPqTables = Seq("centroids", "codebooks", "corpus")
 
-  /** The IVF-PQ on-disk ENCODING version, stamped into meta at build
-    * and required by every reader: codes quantize the coarse residual
-    * and cnrmq stores ‖c_bucket + r̂‖. An index persisted under a
+  /** The IVF-PQ on-disk ENCODING version, stamped as the `enc` prop at
+    * build and required by every reader: codes quantize the coarse
+    * residual and cnrmq stores ‖c_bucket + r̂‖. An index persisted under a
     * different scheme (the pre-residual raw-subspace layout had no
     * stamp at all) would be SILENTLY mis-ranked by this release's ADC —
     * the reader fails loudly and names the rebuild instead. */
@@ -4167,7 +4110,7 @@ object GraftOps {
     * (the first cut, measured at ~24 s of the 33 s build). Seeding:
     * per subspace the first ksub DISTINCT subvector values in vec_id
     * order (the lowid convention), padded by repetition so every
-    * codebook holds exactly ksub centers (meta's ksub is load-bearing;
+    * codebook holds exactly ksub centers (the ksub prop is load-bearing;
     * a duplicated center is harmless — argmin ties to the smaller
     * cid). A code that captures no sample keeps its center. */
   private def trainPqCodebooks(train: DataFrame, m: Int, ksub: Int,
@@ -4258,8 +4201,8 @@ object GraftOps {
     * the pushed shortlist ids only. One write instead of two (a
     * separate codes table bought the same bytes-read at double the
     * build/append/compact write work and a second segment chain).
-    * Tables: meta (m, ksub, dim), centroids, codebooks (sub, cid,
-    * center), corpus. Same [[IndexStore]]
+    * Tables: centroids, codebooks (sub, cid, center), corpus; props
+    * `m`, `ksub`, `dim` and the `enc` stamp. Same [[IndexStore]]
     * commit contract as every other family; `centroidsFrom` adopts a
     * source index's coarse centroids — and, when the source is itself
     * an IVF-PQ index with the same (m, ksub), its CODEBOOKS too (the
@@ -4310,7 +4253,7 @@ object GraftOps {
       val adopted = srcSnap
         .filter(_._2.tables.contains("codebooks"))
         .map { case (src, snap) =>
-          val (sm, sksub, sdim) = readIvfPqMeta(spark, src, snap)
+          val (sm, sksub, sdim) = ivfPqLayout(snap)
           require(sm == m && sksub == ksub && sdim == dim,
             s"ivfPqBuild: the source index at $src holds (m=$sm" +
               s", ksub=$sksub, dim=$sdim) codebooks but " +
@@ -4343,15 +4286,12 @@ object GraftOps {
           trainPqCodebooks(train, m, ksub, dsub, lloydIters))
       }
       import spark.implicits._
-      // all four table writes derive from already-collected driver
-      // metadata (centers/codebooks) — the three tiny ones overlap the
+      // all three table writes derive from already-collected driver
+      // metadata (centers/codebooks) — the two tiny ones overlap the
       // corpus write (guide §2.6); the stage labels keep their scopes
       graft.engine.StageTimer.time("pq:corpus_write") {
         inParallel(
           () => graft.engine.StageTimer.time("pq:meta_writes") {
-            Seq((m, ksub, dim, IvfPqEncoding))
-              .toDF("m", "ksub", "dim", "enc")
-              .coalesce(1).write.parquet(s"$indexDir/$v/meta")
             centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
               .toDF("lid", "center")
               .coalesce(1).write.parquet(s"$indexDir/$v/centroids")
@@ -4363,7 +4303,9 @@ object GraftOps {
           () => pqEncodedCorpus(e, centers, codebooks, dsub)
             .write.partitionBy("bucket").parquet(s"$indexDir/$v/corpus"))
       }
-      (IvfPqTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (IvfPqTables.map(_ -> Seq(v)).toMap,
+        Map("m" -> m.toString, "ksub" -> ksub.toString,
+          "dim" -> dim.toString, "enc" -> IvfPqEncoding))
     }
     ()
   }
@@ -4405,24 +4347,18 @@ object GraftOps {
       Array.tabulate(m, ksub)((sub, cid) => rows((sub, cid)))
     }
 
-  /** An IVF-PQ index's (m, ksub, dim) meta row, memoized per committed
-    * version ([[idxMemo]]) — read by every search, shortlist, and
-    * append. Gates the on-disk encoding stamp ([[IvfPqEncoding]]): an
-    * index persisted under a different (or pre-stamp) scheme fails
-    * loudly here instead of mis-ranking silently. */
-  private def readIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, snap: IndexStore.Snapshot): (Int, Int, Int) =
-    idxMemo(spark, indexDir, snap.chain, snap.version, "meta") {
-      val mt = IndexStore.readTable(spark, indexDir, snap, "meta")
-      val enc = if (mt.columns.contains("enc"))
-        mt.select("enc").head().getString(0) else "<unstamped>"
-      require(enc == IvfPqEncoding,
-        s"the IVF-PQ index at $indexDir was built under encoding '$enc' " +
-          s"but this release reads '$IvfPqEncoding' — its codes would " +
-          "be silently mis-ranked; rebuild it with ivfPqBuild")
-      val mr = mt.select("m", "ksub", "dim").head()
-      (mr.getInt(0), mr.getInt(1), mr.getInt(2))
-    }
+  /** An IVF-PQ index's (m, ksub, dim) props — read by every search,
+    * shortlist, and append. Gates the on-disk encoding stamp
+    * ([[IvfPqEncoding]]): an index persisted under a different scheme
+    * fails loudly here instead of mis-ranking silently. */
+  private def ivfPqLayout(snap: IndexStore.Snapshot): (Int, Int, Int) = {
+    val enc = snap.prop("enc")
+    require(enc == IvfPqEncoding,
+      s"the IVF-PQ index at ${snap.dir} was built under encoding '$enc' " +
+        s"but this release reads '$IvfPqEncoding' — its codes would " +
+        "be silently mis-ranked; rebuild it with ivfPqBuild")
+    (snap.prop("m").toInt, snap.prop("ksub").toInt, snap.prop("dim").toInt)
+  }
 
   /** Append vectors to a persisted [[ivfPqBuild]] index under the
     * FROZEN coarse quantizer AND codebooks — [[ivfAppend]]'s PQ twin:
@@ -4448,7 +4384,7 @@ object GraftOps {
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"no IVF-PQ index at $indexDir — build one with ivfPqBuild first"))
       skipIfReplayed(base, batchId, "ivfPqAppend", negate = false)
-      val (m, ksub, dim) = readIvfPqMeta(spark, indexDir, base)
+      val (m, ksub, dim) = ivfPqLayout(base)
       val centers = readCentroidsSnap(spark, indexDir, base)
       val codebooks = readCodebooksSnap(spark, indexDir, base, m, ksub)
       pqEncodedCorpus(
@@ -4472,13 +4408,13 @@ object GraftOps {
 
   /** [[ivfCompact]]'s PQ twin: folds the dual-view corpus segment
     * chain back to one file per inverted list, drops tombstones, and
-    * republishes the bounded metadata tables unchanged. */
+    * republishes the bounded centroid and codebook tables unchanged. */
   def ivfPqCompact(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
     IndexStore.commit(spark, indexDir, "ivfPqCompact") { (baseOpt, v) =>
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"no IVF-PQ index at $indexDir — build one with ivfPqBuild first"))
-      Seq("meta", "centroids", "codebooks").foreach { t =>
+      Seq("centroids", "codebooks").foreach { t =>
         IndexStore.readTable(spark, indexDir, base, t)
           .coalesce(1).write.parquet(s"$indexDir/$v/$t")
       }
@@ -4529,7 +4465,7 @@ object GraftOps {
     require(maxPushedIds >= 0, "maxPushedIds must be non-negative")
     val spark = queries.sparkSession
     val snap = indexSnapshot(spark, indexDir, "IVF-PQ", "ivfPqBuild")
-    val dim = readIvfPqMeta(spark, indexDir, snap)._3
+    val dim = ivfPqLayout(snap)._3
     val q = requireIndexDim(withNorm(queries, idCol, vecCol), dim,
       "ivfPqSearch")
     val (probed, rawShortlist) = ivfPqShortlist(queries, idCol, vecCol,
@@ -4597,7 +4533,7 @@ object GraftOps {
     val spark = queries.sparkSession
     val snap = snapshot.getOrElse(
       indexSnapshot(spark, indexDir, "IVF-PQ", "ivfPqBuild"))
-    val (m, ksub, dim) = readIvfPqMeta(spark, indexDir, snap)
+    val (m, ksub, dim) = ivfPqLayout(snap)
     val dsub = dim / m
     val q = requireIndexDim(withNorm(queries, idCol, vecCol), dim,
       "ivfPqSearch")
@@ -4759,7 +4695,7 @@ object GraftOps {
   }
 
   /** The cluster-index logical tables ([[clusterIndexBuild]]). */
-  private val ClusterTables = Seq("meta", "parents", "edges")
+  private val ClusterTables = Seq("parents", "edges")
 
   /** The cluster index's partition key: hash of the node id, so a
     * batch's chain lookups prune to the buckets its nodes hash into. */
@@ -4789,9 +4725,9 @@ object GraftOps {
     * version exactly like the retraction tombstones); chains grow by at
     * most one hop per append and [[clusterIndexCompact]] re-flattens
     * (full path compression) on the usual hygiene schedule. Logical
-    * tables: `meta` (n_buckets) + `parents` + `edges` — the RAW edge
-    * batches persist beside the forest (bucketed by hash(a)), which is
-    * what makes [[clusterRetract]]'s erasure honest: a forest alone
+    * tables: `parents` + `edges`, with the `n_buckets` prop — the RAW
+    * edge batches persist beside the forest (bucketed by hash(a)),
+    * which is what makes [[clusterRetract]]'s erasure honest: a forest alone
     * cannot un-merge clusters a taken-down bridge document connected,
     * but the surviving edges can re-derive them
     * ([[clusterIndexCompact]]); edges cost the same order of storage
@@ -4802,18 +4738,15 @@ object GraftOps {
     require(nBuckets >= 1 && nBuckets <= (1 << 20),
       s"nBuckets must be in 1..${1 << 20} (got $nBuckets)")
     val spark = edges.sparkSession
-    import spark.implicits._
     val e = clusterEdgeGuard(edges, srcCol, dstCol, "clusterIndexBuild")
       .localCheckpoint(false)
     val labels = connectedComponents(e, "a", "b")
     IndexStore.commit(spark, indexDir, "clusterIndexBuild") { (_, v) =>
-      // three independent table writes of one commit — overlapped
+      // two independent table writes of one commit — overlapped
       // (guide §2.6; labels is eagerly checkpointed by
-      // connectedComponents, e lazily by the guard, so the two big
+      // connectedComponents, e lazily by the guard, so the two
       // writes read materialized blocks, never racing a shared scan)
       inParallel(
-        () => Seq(nBuckets).toDF("n_buckets")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta"),
         () => { writeBucketedOrEmpty(
           labels.select(col("node"), col("label").as("parent"))
             .withColumn("bucket", clusterBucket(col("node"), nBuckets)),
@@ -4821,7 +4754,8 @@ object GraftOps {
         () => { writeBucketedOrEmpty(
           e.withColumn("bucket", clusterBucket(col("a"), nBuckets)),
           s"$indexDir/$v/edges"); () })
-      (ClusterTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (ClusterTables.map(_ -> Seq(v)).toMap,
+        Map("n_buckets" -> nBuckets.toString))
     }
     ()
   }
@@ -4881,7 +4815,7 @@ object GraftOps {
         // roots: a retry against a concurrently REBUILT index (new
         // layout) must bucket its rows under the winner's layout, or
         // later chain lookups would prune to the wrong partitions
-        val nBuckets = metaRowOf(spark, indexDir, base).getInt(0)
+        val nBuckets = base.prop("n_buckets").toInt
         val nodes = e.select(col("a").as("node"))
           .union(e.select(col("b").as("node"))).distinct()
         val roots = resolveRootsPruned(spark, indexDir, base, nodes,
@@ -4974,7 +4908,7 @@ object GraftOps {
         skipIfReplayed(base, batchId, "clusterRetract", negate = true)
         // layout from the CLOSURE's base snapshot (the retry rule every
         // cluster-index mutation follows)
-        val nBuckets = metaRowOf(spark, indexDir, base).getInt(0)
+        val nBuckets = base.prop("n_buckets").toInt
         writeBucketedOrEmpty(
           ids.withColumn("bucket", clusterBucket(col("node"), nBuckets)),
           s"$indexDir/$v/tombstones")
@@ -5184,9 +5118,7 @@ object GraftOps {
         val base = baseOpt.getOrElse(throw new IllegalArgumentException(
           s"no cluster index at $indexDir — build one with " +
             "clusterIndexBuild first"))
-        val nBuckets = metaRowOf(spark, indexDir, base).getInt(0)
-        IndexStore.readTable(spark, indexDir, base, "meta")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta")
+        val nBuckets = base.prop("n_buckets").toInt
         val resolved = clusterResolveSnap(spark, indexDir, base)
           .localCheckpoint(false)
         val edgesT = IndexStore.readTableTagged(spark, indexDir, base,
@@ -5802,7 +5734,7 @@ object GraftOps {
   }
 
   /** The pack-index logical tables ([[packIndexBuild]]). */
-  private val PackTables = Seq("meta", "offsets")
+  private val PackTables = Seq("offsets")
 
   /** Freeze a corpus's [[packSequences]] layout behind a PERSISTENT pack
     * index at `indexDir` — the incremental completion of packing.
@@ -5817,11 +5749,11 @@ object GraftOps {
     * `[base, base + batchTokens)` per shard in md5-of-id order.
     * Committed through the [[IndexStore]] versioned-snapshot protocol
     * (atomic publish, snapshot isolation, loud concurrent-writer
-    * failure, [[indexVacuum]] reclaim). Logical tables:
-    *  - `meta`    — one row (seq_len, n_shards): the immutable layout
-    *    shape, so appends never need (or trust) caller-supplied dials;
-    *  - `offsets` — (shard, next_off): each shard stream's token
-    *    length so far — `nShards` rows, index METADATA, not data.
+    * failure, [[indexVacuum]] reclaim). The immutable layout shape
+    * rides as the `seq_len` and `n_shards` props, so appends never
+    * need (or trust) caller-supplied dials; the one logical table,
+    * `offsets` — (shard, next_off), holds each shard stream's token
+    * length so far — `nShards` rows, index METADATA, not data.
     * No compact operation exists ON PURPOSE: unlike the band families
     * (whose appends accrete segments), every append REPLACES the
     * offsets table whole (`nShards` rows), so segments never
@@ -5842,10 +5774,7 @@ object GraftOps {
       indexDir: String, seqLen: Long, nShards: Int = 1024): DataFrame = {
     val laid = packSequences(corpus, idCol, tokensCol, seqLen, nShards)
     val spark = corpus.sparkSession
-    import spark.implicits._
     IndexStore.commit(spark, indexDir, "packIndexBuild") { (_, v) =>
-      Seq((seqLen, nShards)).toDF("seq_len", "n_shards")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
       // offsets derive from the LAYOUT plan itself (not a second
       // tokenize of the corpus): one logical path for both artifacts,
       // and the groupBy reuses the layout's shard exchange. The
@@ -5856,7 +5785,8 @@ object GraftOps {
       laid.select(col("shard"), col(tokensCol).cast("long").as("__t"))
         .groupBy("shard").agg(sum("__t").as("next_off"))
         .coalesce(1).write.parquet(s"$indexDir/$v/offsets")
-      (PackTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (PackTables.map(_ -> Seq(v)).toMap,
+        Map("seq_len" -> seqLen.toString, "n_shards" -> nShards.toString))
     }
     laid
   }
@@ -5875,7 +5805,7 @@ object GraftOps {
     * top guards against RE-EXECUTION of the caller's plan (a
     * non-re-execution-stable input recomputing under a downstream
     * action). Feed the rows to [[packLayoutRows]] for the loader-facing
-    * manifest. Layout dials come from the index's `meta`, never the
+    * manifest. Layout dials come from the index's props, never the
     * caller. Empty batches are a no-op ([[ivfAppend]]'s
     * stance — no version churn).
     *
@@ -5895,9 +5825,8 @@ object GraftOps {
     val spark = batch.sparkSession
     import spark.implicits._
     val snap = indexSnapshot(spark, indexDir, "pack", "packIndexBuild")
-    val meta = metaRowOf(spark, indexDir, snap)
-    val seqLen = meta.getLong(0)
-    val nShards = meta.getInt(1)
+    val seqLen = snap.prop("seq_len").toLong
+    val nShards = snap.prop("n_shards").toInt
     // ONE materialization of the batch feeds the emptiness check, the
     // committed offset totals, and the returned layout — without the
     // pin those would be independent re-evaluations of the caller's
@@ -6206,7 +6135,7 @@ object GraftOps {
       .select(col("did").as("doc_id"), col("score"))
   }
 
-  private val DsirTables = Seq("meta", "raw_counts", "tgt_counts", "totals")
+  private val DsirTables = Seq("raw_counts", "tgt_counts", "totals")
 
   /** A batch's per-feature count deltas for one DSIR-stats segment:
     * (k, cnt, bucket). `negate` flips the sign (the retraction
@@ -6253,7 +6182,9 @@ object GraftOps {
     * `featureBuckets = Some(B)` stores hashed features outright — the
     * bounded-table scale mode (V = B needs no vocabulary scan at probe
     * time; the text mode derives V from the folded count tables, one
-    * aggregate over data ~3 orders of magnitude under the text). */
+    * aggregate over data ~3 orders of magnitude under the text).
+    * Tables: `raw_counts`, `tgt_counts`, `totals`; props `n`,
+    * `n_buckets` and `feature_buckets` (0 = text-keyed). */
   def dsirStatsBuild(pool: DataFrame, idCol: String, textCol: String,
       target: DataFrame, targetTextCol: String, indexDir: String,
       n: Int = 2, featureBuckets: Option[Int] = None,
@@ -6264,15 +6195,11 @@ object GraftOps {
     featureBuckets.foreach(b =>
       require(b >= 16, s"featureBuckets must be >= 16 (got $b)"))
     val spark = pool.sparkSession
-    import spark.implicits._
     // doctrine carve-out (header rule 1): synthetic key for counting —
     // same as dsirScores' target side; __tid never reaches the segment
     val tgt = target.select(col(targetTextCol))
       .withColumn("__tid", monotonically_increasing_id())
     IndexStore.commit(spark, indexDir, "dsirStatsBuild") { (_, v) =>
-      Seq((n, nBuckets, featureBuckets.getOrElse(0)))
-        .toDF("n", "n_buckets", "feature_buckets")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
       // the raw-pool and target-seed count segments are independent —
       // overlapped (guide §2.6); totals then reads both PINNED frames'
       // checkpointed blocks
@@ -6294,7 +6221,9 @@ object GraftOps {
       dsirTotalsDelta(pool.sparkSession,
         dsirTotalOf(rawPinned), dsirTotalOf(tgtPinned))
         .coalesce(1).write.parquet(s"$indexDir/$v/totals")
-      (DsirTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (DsirTables.map(_ -> Seq(v)).toMap,
+        Map("n" -> n.toString, "n_buckets" -> nBuckets.toString,
+          "feature_buckets" -> featureBuckets.getOrElse(0).toString))
     }
     ()
   }
@@ -6321,6 +6250,10 @@ object GraftOps {
       indexDir: String, side: String = "raw"): Unit =
     dsirStatsDelta(batch, idCol, textCol, indexDir, side,
       "dsirStatsRetract", negate = true)
+
+  /** A DSIR store's hashed-feature bucket count; None = text-keyed. */
+  private def dsirFeatureBuckets(snap: IndexStore.Snapshot): Option[Int] =
+    Some(snap.prop("feature_buckets").toInt).filter(_ != 0)
 
   private def sideTable(side: String, op: String): String = side match {
     case "raw" => "raw_counts"
@@ -6351,10 +6284,9 @@ object GraftOps {
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"$op: no index at $indexDir — build one with dsirStatsBuild " +
           "first"))
-      val m = metaRowOf(spark, indexDir, base)
-      val fb = if (m.getInt(2) == 0) None else Some(m.getInt(2))
       val pinned = writeBucketedOrEmpty(dsirCountDelta(batch, idCol,
-        textCol, m.getInt(0), m.getInt(1), fb, op, negate),
+        textCol, base.prop("n").toInt, base.prop("n_buckets").toInt,
+        dsirFeatureBuckets(base), op, negate),
         s"$indexDir/$v/$table")
       // totals derived from the pinned segment (Σcnt carries the sign) —
       // a second scan of a non-deterministic batch could write totals
@@ -6382,8 +6314,6 @@ object GraftOps {
       (baseOpt, v) =>
         val base = baseOpt.getOrElse(throw new IllegalArgumentException(
           s"dsirStatsCompact: no index at $indexDir"))
-        IndexStore.readTable(spark, indexDir, base, "meta")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta")
         Seq("raw_counts", "tgt_counts").foreach { t =>
           writeBucketedOrEmpty(
             IndexStore.readTable(spark, indexDir, base, t)
@@ -6425,9 +6355,8 @@ object GraftOps {
         throw new IllegalArgumentException(
           s"dsirScoreAgainstStats: no index at $indexDir — build one " +
             "with dsirStatsBuild first")))
-    val m = metaRowOf(spark, indexDir, snap)
-    val (n, nBuckets) = (m.getInt(0), m.getInt(1))
-    val fb = if (m.getInt(2) == 0) None else Some(m.getInt(2))
+    val (n, nBuckets) = (snap.prop("n").toInt, snap.prop("n_buckets").toInt)
+    val fb = dsirFeatureBuckets(snap)
     val f0 = dsirFeats(batch, idCol, textCol, n, "dsirScoreAgainstStats")
     val batchF = fb.fold(f0.withColumnRenamed("feat", "k"))(b =>
       f0.select(col("did"),
@@ -6575,7 +6504,7 @@ object GraftOps {
         coalesce(col("n_events"), lit(0)).as("n_events"))
   }
 
-  private val LmTables = Seq("meta", "uni_counts", "big_counts", "totals")
+  private val LmTables = Seq("uni_counts", "big_counts", "totals")
 
   /** One LM-stats totals row derived from a PINNED unigram segment (the
     * dsir/bm25 sidecar convention — stats from the bytes actually
@@ -6661,17 +6590,15 @@ object GraftOps {
     * left — scores equal to the shared 4dp boundary, so the oracle is
     * exact. Unlike the DSIR store, the batch does NOT count toward the
     * reference (absolute fluency under a frozen corpus is the point —
-    * arrivals must never teach the gate their own language). */
+    * arrivals must never teach the gate their own language). Tables:
+    * `uni_counts`, `big_counts`, `totals`; props `n`, `n_buckets`. */
   def lmStatsBuild(ref: DataFrame, textCol: String, indexDir: String,
       n: Int = 2, nBuckets: Int = 256): Unit = {
     require(n == 1 || n == 2, s"n must be 1 or 2 (got $n)")
     require(nBuckets >= 1 && nBuckets <= (1 << 20),
       s"nBuckets must be in 1..${1 << 20} (got $nBuckets)")
     val spark = ref.sparkSession
-    import spark.implicits._
     IndexStore.commit(spark, indexDir, "lmStatsBuild") { (_, v) =>
-      Seq((n, nBuckets)).toDF("n", "n_buckets")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
       // the uni chain (counts -> totals) and the bigram write share no
       // data dependency — overlapped (guide §2.6, inParallel)
       inParallel(
@@ -6685,13 +6612,14 @@ object GraftOps {
             .coalesce(1).write.parquet(s"$indexDir/$v/totals")
         },
         // the bigram table writes for n = 1 too (empty schema cost
-        // only): one layout for both orders, and meta's n decides the
-        // probe
+        // only): one layout for both orders, and the `n` prop decides
+        // the probe
         () => { writeBucketedOrEmpty(
           lmBigDelta(ref, textCol, nBuckets, "lmStatsBuild",
             negate = false),
           s"$indexDir/$v/big_counts"); () })
-      (LmTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (LmTables.map(_ -> Seq(v)).toMap,
+        Map("n" -> n.toString, "n_buckets" -> nBuckets.toString))
     }
     ()
   }
@@ -6722,8 +6650,7 @@ object GraftOps {
     IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"$op: no index at $indexDir — build one with lmStatsBuild first"))
-      val m = metaRowOf(spark, indexDir, base)
-      val nBuckets = m.getInt(1)
+      val nBuckets = base.prop("n_buckets").toInt
       inParallel(
         () => {
           val pinnedUni = writeBucketedOrEmpty(
@@ -6755,8 +6682,6 @@ object GraftOps {
       (baseOpt, v) =>
         val base = baseOpt.getOrElse(throw new IllegalArgumentException(
           s"lmStatsCompact: no index at $indexDir"))
-        IndexStore.readTable(spark, indexDir, base, "meta")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta")
         val pinnedUni = writeBucketedOrEmpty(
           IndexStore.readTable(spark, indexDir, base, "uni_counts")
             .groupBy("w").agg(sum("cnt").as("cnt"),
@@ -6805,8 +6730,7 @@ object GraftOps {
         throw new IllegalArgumentException(
           s"lmPerplexityAgainstStats: no index at $indexDir — build " +
             "one with lmStatsBuild first")))
-    val m = metaRowOf(spark, indexDir, snap)
-    val (n, nBuckets) = (m.getInt(0), m.getInt(1))
+    val (n, nBuckets) = (snap.prop("n").toInt, snap.prop("n_buckets").toInt)
     // the two reference scalars in the ADDITIVE totals convention
     // (bm25 N/Σdl, dsir totals): nTok sums the per-segment d_ntok
     // deltas — ≤ #segments rows, never a count-table fold. V (live

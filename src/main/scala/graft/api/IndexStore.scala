@@ -32,8 +32,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    one — a dir deleted and rebuilt restarts at v00001 under a NEW
   *    chain, so (chain, version) identifies one commit and
   *    (chain, vdir) one segment, the keys of every metadata memo);
-  *    optional `prop <key> <value>` lines (the replay watermark lives
-  *    here); one `schema <id> <json>` line per DISTINCT segment read
+  *    `prop <key> <value>` lines — the client's LAYOUT (bucket count,
+  *    sketch shape, encoding stamp: `k`, `n_buckets`, `n_hashes`,
+  *    `bands`, `dim`, `n_bits`, `seed`, `bloom_fpp`, `m`, `ksub`,
+  *    `enc`, `seq_len`, `n_shards`, `n`, `feature_buckets`,
+  *    `num_features`, `end_of_word`), written by the build and carried
+  *    by every later commit, plus the replay watermark; keys are
+  *    whitespace-free and values percent-encoded (UTF-8, space as
+  *    `%20`), so any string round-trips and a number reads as itself;
+  *    one `schema <id> <json>` line per DISTINCT segment read
   *    schema (Spark's StructType JSON, exactly what
   *    `spark.read.parquet(segment).schema` infers: partition columns
   *    last); and one `table <name> <vdir>:<id> ...` line per table
@@ -68,14 +75,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * construction. */
 private[graft] object IndexStore {
 
-  /** One committed snapshot: manifest version, commit properties
-    * (free-form whitespace-free key/values — the curateIncremental
-    * replay watermark rides here), table → owning segment
-    * version-dirs, oldest first, each (table, vdir) segment's recorded
-    * read schema, and the version chain's identity. */
+  /** One committed snapshot of the index at `dir`: manifest version,
+    * commit properties (the client's layout and the curateIncremental
+    * replay watermark), table → owning segment version-dirs, oldest
+    * first, each (table, vdir) segment's recorded read schema, and the
+    * version chain's identity. */
   final case class Snapshot(version: Int, props: Map[String, String],
       tables: Map[String, Seq[String]],
-      schemas: Map[(String, String), StructType], chain: String) {
+      schemas: Map[(String, String), StructType], chain: String,
+      dir: String) {
+    /** A layout prop the client's build records, failing loudly when
+      * the manifest lacks it. */
+    def prop(key: String): String =
+      props.getOrElse(key, throw new IllegalStateException(
+        s"index at $dir: manifest v$version records no '$key' prop — it " +
+          "predates the manifest-recorded index layout; rebuild the index"))
+
     /** The recorded read schema of `table`'s segment `vdir`. */
     def schema(table: String, vdir: String): StructType =
       schemas.getOrElse((table, vdir), throw new IllegalStateException(
@@ -92,7 +107,8 @@ private[graft] object IndexStore {
     val manifests = fs.listStatus(dir).map(_.getPath)
       .filter(_.getName.matches("v\\d{5,}\\.manifest"))
     if (manifests.isEmpty) None
-    else Some(readManifest(fs, manifests.maxBy(p => versionOf(p.getName))))
+    else Some(readManifest(fs, manifests.maxBy(p => versionOf(p.getName)),
+      indexDir))
   }
 
   /** The snapshot a SPECIFIC manifest version committed — the replay
@@ -104,7 +120,7 @@ private[graft] object IndexStore {
     val p = new org.apache.hadoop.fs.Path(
       f"${manifestDir(indexDir)}/v$version%05d.manifest")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(readManifest(fs, p)) else None
+    if (fs.exists(p)) Some(readManifest(fs, p, indexDir)) else None
   }
 
   /** Read one logical table of a snapshot: the union of its segment
@@ -243,9 +259,9 @@ private[graft] object IndexStore {
       val (tables, props) = write(base, vname)
       require(allowEmpty || tables.nonEmpty, s"$op: commit records no tables")
       props.foreach { case (k, v) =>
-        require(k.nonEmpty && v.nonEmpty && !s"$k$v".exists(_.isWhitespace),
-          s"$op: manifest props must be non-empty and whitespace-free " +
-            s"(got '$k' -> '$v')")
+        require(k.nonEmpty && v.nonEmpty && !k.exists(_.isWhitespace),
+          s"$op: manifest props need a whitespace-free key and a " +
+            s"non-empty value (got '$k' -> '$v')")
       }
       // a segment the base already recorded keeps its schema; a fresh
       // one (or one re-pointed under another table) derives it here,
@@ -259,7 +275,7 @@ private[graft] object IndexStore {
       }.toMap
       val chain = base.map(_.chain)
         .getOrElse(java.util.UUID.randomUUID().toString)
-      val snap = Snapshot(next, props, tables, schemas, chain)
+      val snap = Snapshot(next, props, tables, schemas, chain, indexDir)
       val body = manifestText(snap)
       val tmp = new org.apache.hadoop.fs.Path(
         s"${manifestDir(indexDir)}/.$vname.manifest.tmp")
@@ -410,7 +426,9 @@ private[graft] object IndexStore {
     val ids = tables.flatMap { case (t, segs) => segs.map(sv => snap.schemas((t, sv))) }
       .distinct.zipWithIndex.toMap
     s"version ${snap.version}\nchain ${snap.chain}\n" +
-      snap.props.toSeq.sorted.map { case (k, v) => s"prop $k $v\n" }.mkString +
+      snap.props.toSeq.sorted.map { case (k, v) =>
+        s"prop $k ${java.net.URLEncoder.encode(v, "UTF-8").replace("+", "%20")}\n"
+      }.mkString +
       ids.toSeq.sortBy(_._2).map { case (s, i) => s"schema $i ${s.json}\n" }
         .mkString +
       tables.map { case (t, segs) =>
@@ -420,7 +438,7 @@ private[graft] object IndexStore {
   }
 
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Snapshot = {
+      path: org.apache.hadoop.fs.Path, indexDir: String): Snapshot = {
     val in = fs.open(path)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
@@ -431,7 +449,9 @@ private[graft] object IndexStore {
     val chain = field("chain").headOption.map(_(1)).getOrElse(
       throw new IllegalStateException(s"$path predates the schema-recording " +
         "manifest format (no chain line) — rebuild the index"))
-    val props = field("prop").map { case Array(_, k, v) => k -> v }.toMap
+    val props = field("prop").map { case Array(_, k, v) =>
+      k -> java.net.URLDecoder.decode(v, "UTF-8")
+    }.toMap
     val schemaById = field("schema").map { case Array(_, i, json) =>
       i -> DataType.fromJson(json).asInstanceOf[StructType]
     }.toMap
@@ -443,7 +463,7 @@ private[graft] object IndexStore {
     }
     Snapshot(ver, props, segs.map { case (t, ss) => t -> ss.map(_._1) }.toMap,
       segs.flatMap { case (t, ss) => ss.map { case (sv, s) => (t, sv) -> s } }
-        .toMap, chain)
+        .toMap, chain, indexDir)
   }
 }
 

@@ -388,9 +388,10 @@ object PortraitOps {
         segmentDir = BucketSegment) { (base, vname) =>
       // the manifest records the bucket layout; a mismatched nBuckets would
       // hash keys into the wrong dirs and silently duplicate them
-      base.map(layoutOf(tableDir, _)).foreach(nb => require(nb == nBuckets,
-        s"profileUpsert: table $tableDir was created with nBuckets=$nb, " +
-          s"called with $nBuckets — the layouts are incompatible"))
+      base.map(_.prop("n_buckets").toInt).foreach(nb =>
+        require(nb == nBuckets,
+          s"profileUpsert: table $tableDir was created with nBuckets=$nb, " +
+            s"called with $nBuckets — the layouts are incompatible"))
       val baseMap = base.map(bucketMap).getOrElse(Map.empty[Int, String])
       val merged =
         if (!baseMap.keySet.exists(touched)) neu // key-unique, sorted, distinct
@@ -430,7 +431,7 @@ object PortraitOps {
     val snap = IndexStore.resolve(spark, tableDir).getOrElse(
       throw new IllegalStateException(
         s"profileDelete: no committed profile snapshot at $tableDir"))
-    val nBuckets = layoutOf(tableDir, snap)
+    val nBuckets = snap.prop("n_buckets").toInt
     val baseMap = bucketMap(snap)
     def bucketOf(c: Column): Column = profileBucket(c, nBuckets)
     val ks = keys.select(
@@ -534,12 +535,6 @@ object PortraitOps {
       : (Map[String, Seq[String]], Map[String, String]) =
     (buckets.map { case (b, v) => s"bucket=$b" -> Seq(v) },
       Map("n_buckets" -> nBuckets.toString))
-
-  /** The bucket layout a profile snapshot records. */
-  private def layoutOf(tableDir: String, snap: IndexStore.Snapshot): Int =
-    snap.props.getOrElse("n_buckets", throw new IllegalStateException(
-      s"$tableDir: manifest v${snap.version} records no n_buckets — not a " +
-        "profile table")).toInt
 
   /** Union of per-version bucket reads over a snapshot's live buckets
     * that `keep` selects, each version dir read with its recorded

@@ -671,7 +671,7 @@ object TextAnalysis {
   }
 
   /** The classifier-store logical tables ([[clfStoreBuild]]). */
-  private val ClfTables = Seq("meta", "feats")
+  private val ClfTables = Seq("feats")
 
   /** A batch's SIGNED feature rows for the classifier store — the
     * [[classifierFeats]] derivation with the segment's sign folded
@@ -721,19 +721,17 @@ object TextAnalysis {
     * family. No totals sidecar BY DESIGN: training folds the whole
     * live table anyway (full-batch GD is O(feature rows) per
     * iteration), so there is no probe-time scalar for a totals segment
-    * to save — nDocs falls out of the folded bias rows. */
+    * to save — nDocs falls out of the folded bias rows. The one table,
+    * `feats`, rides with the `num_features` prop. */
   def clfStoreBuild(docs: DataFrame, idCol: String, textCol: String,
       labelCol: String, indexDir: String, numFeatures: Int = 1024): Unit = {
     require(numFeatures >= 2 && numFeatures <= (1 << 20),
       s"numFeatures must be in 2..${1 << 20} (got $numFeatures)")
     val spark = docs.sparkSession
-    import spark.implicits._
     require(!docs.isEmpty,
       "clfStoreBuild: empty corpus — a classifier store needs at least " +
         "one labeled document")
     IndexStore.commit(spark, indexDir, "clfStoreBuild") { (_, v) =>
-      Seq(numFeatures).toDF("num_features")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
       // unique ids at build too — it keeps the ONE-segment invariant
       // (a single-segment feats table is always a valid fold) that
       // trainClassifierAgainstStore's skip-fold fast path relies on.
@@ -742,7 +740,8 @@ object TextAnalysis {
       clfFeatsSigned(docs, idCol, textCol, labelCol, numFeatures,
         "clfStoreBuild", negate = false)
         .write.parquet(s"$indexDir/$v/feats")
-      (ClfTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (ClfTables.map(_ -> Seq(v)).toMap,
+        Map("num_features" -> numFeatures.toString))
     }
     ()
   }
@@ -802,8 +801,8 @@ object TextAnalysis {
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"$op: no index at $indexDir — build one with clfStoreBuild first"))
       GraftOps.skipIfReplayed(base, batchId, op, negate)
-      val b = GraftOps.metaRowOf(spark, indexDir, base).getInt(0)
-      clfFeatsSigned(batch, idCol, textCol, labelCol, b, op, negate)
+      clfFeatsSigned(batch, idCol, textCol, labelCol,
+          base.prop("num_features").toInt, op, negate)
         .write.parquet(s"$indexDir/$v/feats")
       (base.tables + ("feats" -> (base.tables("feats") :+ v)),
         base.props ++ GraftOps.batchProps(batchId, base.version, negate))
@@ -828,8 +827,6 @@ object TextAnalysis {
       (baseOpt, v) =>
         val base = baseOpt.getOrElse(throw new IllegalArgumentException(
           s"clfStoreCompact: no index at $indexDir"))
-        IndexStore.readTable(spark, indexDir, base, "meta")
-          .coalesce(1).write.parquet(s"$indexDir/$v/meta")
         val folded = foldedLiveFeats(spark, indexDir, base,
           "clfStoreCompact")
         writePlainOrEmpty(folded, s"$indexDir/$v/feats")
@@ -896,7 +893,7 @@ object TextAnalysis {
     require(lr > 0, s"lr must be positive (got $lr)")
     val snap = snapshot.getOrElse(GraftOps.indexSnapshot(spark, indexDir,
       "classifier feature", "clfStoreBuild"))
-    val b = GraftOps.metaRowOf(spark, indexDir, snap).getInt(0)
+    val b = snap.prop("num_features").toInt
     val live =
       if (snap.tables("feats").lengthCompare(1) == 0)
         IndexStore.readTable(spark, indexDir, snap, "feats")
@@ -1459,7 +1456,7 @@ object TextAnalysis {
   }
 
   /** The vocab-store logical tables ([[vocabStoreBuild]]). */
-  private val VocabTables = Seq("meta", "merges", "vocab")
+  private val VocabTables = Seq("merges", "vocab")
 
   /** Persist a trained tokenizer — merge list + the frozen id
     * vocabulary it induces — as the ELEVENTH [[IndexStore]] family,
@@ -1467,12 +1464,12 @@ object TextAnalysis {
     * every stage artifact of the pipeline (gate stats, dedup indexes,
     * selection stores, pack layout, and now the TOKENIZER) has a
     * store-backed incremental form, instead of living as a caller-held
-    * DataFrame that dies with the session. Tables: `meta`
-    * (end_of_word), `merges` (rank, left, right — frozen at build:
-    * re-training is a REBUILD, never an append, because a changed
-    * merge list re-tokenizes history), and `vocab` (id, token) — the
-    * [[bpeVocab]] id space at build time, plus one append segment per
-    * [[vocabStoreAppendTokens]] batch.
+    * DataFrame that dies with the session. The end-of-word marker rides
+    * as the `end_of_word` prop. Tables: `merges` (rank, left, right —
+    * frozen at build: re-training is a REBUILD, never an append,
+    * because a changed merge list re-tokenizes history), and `vocab`
+    * (id, token) — the [[bpeVocab]] id space at build time, plus one
+    * append segment per [[vocabStoreAppendTokens]] batch.
     *
     * THE FROZEN-PREFIX INVARIANT (the store's whole point): ids derive
     * from the train corpus + merge list at build, appends only ever
@@ -1489,15 +1486,13 @@ object TextAnalysis {
       endOfWord: String = "</w>"): Unit = {
     require(endOfWord.nonEmpty, "endOfWord must be non-empty")
     val spark = trainDocs.sparkSession
-    import spark.implicits._
     val vocab = bpeVocab(trainDocs, textCol, merges, endOfWord)
     IndexStore.commit(spark, indexDir, "vocabStoreBuild") { (_, v) =>
-      Seq(endOfWord).toDF("end_of_word")
-        .coalesce(1).write.parquet(s"$indexDir/$v/meta")
       merges.select(col("rank").cast("int"), col("left"), col("right"))
         .coalesce(1).write.parquet(s"$indexDir/$v/merges")
       vocab.coalesce(1).write.parquet(s"$indexDir/$v/vocab")
-      (VocabTables.map(_ -> Seq(v)).toMap, Map.empty[String, String])
+      (VocabTables.map(_ -> Seq(v)).toMap,
+        Map("end_of_word" -> endOfWord))
     }
     ()
   }
@@ -1593,7 +1588,7 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val snap = GraftOps.indexSnapshot(spark, indexDir, "vocab",
       "vocabStoreBuild")
-    val eow = GraftOps.metaRowOf(spark, indexDir, snap).getString(0)
+    val eow = snap.prop("end_of_word")
     val merges = IndexStore.readTable(spark, indexDir, snap, "merges")
     val vocab = IndexStore.readTable(spark, indexDir, snap, "vocab")
     val unkId = unkToken.map { t =>

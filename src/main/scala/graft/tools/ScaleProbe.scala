@@ -813,8 +813,9 @@ object ScaleProbe {
     // page-cache comfort zone — the claim the dual-view layout makes)
     // and a REPEAT search per cell: the second call probes the SAME
     // committed version, so the (session, dir, version)-keyed metadata
-    // memo serves centroids/codebooks/meta from the driver and the
-    // repeat prices the serving path (zero metadata jobs).
+    // memo serves centroids/codebooks from the driver (the layout is
+    // manifest props) and the repeat prices the serving path (zero
+    // metadata jobs).
     for (n <- Seq(2000L, 6000L, 20000L, 60000L, 200000L)) {
       val hist = embs(n, 0)
       val dir = Tables.scratchDir(s"probe_ivfpq_${n}_")

@@ -10,6 +10,9 @@ import graft.engine.SparkTestBase
   *  - every committed segment's manifest-recorded schema equals what
   *    `spark.read.parquet(segment)` infers, for every index family and
   *    the profile store, and no read of a committed table runs a job;
+  *  - every family records its layout as manifest props, whose values
+  *    round-trip any string, and a missing prop fails loudly;
+  *  - a batch sketch takes its shape from the snapshot it probes;
   *  - the metadata memos cannot serve a deleted-and-rebuilt index;
   *  - a repeat hybrid query costs the same however many segments the
   *    indexes have accreted. */
@@ -118,6 +121,213 @@ class IndexStoreSpec extends SparkTestBase {
     // retraction-aware paths
     assert(IndexStore.resolve(s, fp).get.tables.contains("tombstones"))
     assert(IndexStore.resolve(s, ivf).get.tables.contains("tombstones"))
+  }
+
+  /** Every manifest an index dir holds, oldest first. */
+  private def allSnapshots(dir: String): Seq[IndexStore.Snapshot] =
+    (1 to IndexStore.resolve(spark, dir).get.version)
+      .flatMap(IndexStore.resolveAt(spark, dir, _))
+
+  /** The watermark props a commit may add beside the layout. */
+  private val Watermarks = Set("last_batch", "last_batch_base", "last_retract")
+
+  test("across build, append and compact, every family records its layout " +
+    "as manifest props with the build's values, and no manifest lists a " +
+    "meta table") {
+    val s = spark
+    import s.implicits._
+    graft.GraftExtensions.register(s)
+    val docs = words(1, 12).toDF("doc_id", "text")
+    val more = words(2, 4).toDF("doc_id", "text")
+    val labeled = docs.withColumn("label", (col("doc_id") % 2).cast("int"))
+    val labeledMore = more.withColumn("label", (col("doc_id") % 2).cast("int"))
+    val emb = vectors(1, 16).toDF("vec_id", "embedding")
+    val embMore = vectors(2, 4).toDF("vec_id", "embedding")
+    val merges = TextAnalysis.bpeTrain(docs, "text", 4, method = "local")
+    // (name, steps, expected layout props) — each step is one commit
+    val families: Seq[(String, Seq[String => Unit], Map[String, String])] =
+      Seq(
+        ("gram", Seq(
+          d => GraftOps.gramIndexBuild(docs, "text", d, k = 3, nBuckets = 5),
+          d => GraftOps.gramIndexAppend(more, "text", d),
+          d => GraftOps.gramIndexCompact(s, d)),
+          Map("k" -> "3", "n_buckets" -> "5")),
+        ("fingerprint", Seq(
+          d => GraftOps.fingerprintBuild(docs, "doc_id", "text", d,
+            nHashes = 16, bands = 4),
+          d => GraftOps.fingerprintAppend(more, "doc_id", "text", d),
+          d => GraftOps.fingerprintCompact(s, d)),
+          Map("n_hashes" -> "16", "bands" -> "4")),
+        ("srp", Seq(
+          d => GraftOps.srpIndexBuild(emb, "vec_id", "embedding", d, dim = 4,
+            nBits = 16, bands = 4, seed = 7L),
+          d => GraftOps.srpIndexAppend(embMore, "vec_id", "embedding", d),
+          d => GraftOps.srpIndexCompact(s, d)),
+          Map("dim" -> "4", "n_bits" -> "16", "bands" -> "4", "seed" -> "7")),
+        ("digest", Seq(
+          d => GraftOps.digestIndexBuild(docs, "text", d, nBuckets = 5),
+          d => GraftOps.digestIndexAppend(more, "text", d),
+          d => GraftOps.digestIndexCompact(s, d)),
+          Map("n_buckets" -> "5")),
+        ("digest+bloom", Seq(
+          d => GraftOps.digestIndexBuild(docs, "text", d, nBuckets = 5,
+            bloomFpp = Some(0.05)),
+          d => GraftOps.digestIndexAppend(more, "text", d),
+          d => GraftOps.digestIndexCompact(s, d)),
+          Map("n_buckets" -> "5", "bloom_fpp" -> "0.05")),
+        ("bm25", Seq(
+          d => GraftOps.bm25IndexBuild(docs, "doc_id", "text", d,
+            nBuckets = 5),
+          d => GraftOps.bm25IndexAppend(more, "doc_id", "text", d),
+          d => GraftOps.bm25IndexCompact(s, d)),
+          Map("n_buckets" -> "5")),
+        ("ivfPq", Seq(
+          d => GraftOps.ivfPqBuild(emb, "vec_id", "embedding", d, nLists = 2,
+            m = 2, ksub = 4),
+          d => GraftOps.ivfPqAppend(embMore, "vec_id", "embedding", d),
+          d => GraftOps.ivfPqCompact(s, d)),
+          Map("m" -> "2", "ksub" -> "4", "dim" -> "4", "enc" -> "residual-v1")),
+        ("cluster", Seq(
+          d => GraftOps.clusterIndexBuild(
+            Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("x", "y"), "x", "y", d,
+            nBuckets = 5),
+          d => GraftOps.clusterIndexAppend(Seq((3L, 4L)).toDF("x", "y"),
+            "x", "y", d),
+          d => GraftOps.clusterIndexCompact(s, d)),
+          Map("n_buckets" -> "5")),
+        ("pack", Seq(
+          d => { GraftOps.packIndexBuild(
+            (0L until 8L).map(i => (i, 5L)).toDF("id", "nt"), "id", "nt", d,
+            seqLen = 8, nShards = 2); () },
+          d => { GraftOps.packIndexAppend(Seq((100L, 3L)).toDF("id", "nt"),
+            "id", "nt", d).collect(); () }),
+          Map("seq_len" -> "8", "n_shards" -> "2")),
+        ("dsir", Seq(
+          d => GraftOps.dsirStatsBuild(docs, "doc_id", "text", more, "text",
+            d, n = 1, featureBuckets = Some(32), nBuckets = 5),
+          d => GraftOps.dsirStatsAppend(more, "doc_id", "text", d),
+          d => GraftOps.dsirStatsCompact(s, d)),
+          Map("n" -> "1", "n_buckets" -> "5", "feature_buckets" -> "32")),
+        ("lm", Seq(
+          d => GraftOps.lmStatsBuild(docs, "text", d, n = 1, nBuckets = 5),
+          d => GraftOps.lmStatsAppend(more, "text", d),
+          d => GraftOps.lmStatsCompact(s, d)),
+          Map("n" -> "1", "n_buckets" -> "5")),
+        ("classifier", Seq(
+          d => TextAnalysis.clfStoreBuild(labeled, "doc_id", "text", "label",
+            d, numFeatures = 16),
+          d => TextAnalysis.clfStoreAppend(labeledMore, "doc_id", "text",
+            "label", d),
+          d => TextAnalysis.clfStoreCompact(s, d)),
+          Map("num_features" -> "16")),
+        ("vocab", Seq(
+          d => TextAnalysis.vocabStoreBuild(docs, "text", merges, d,
+            endOfWord = "</w>"),
+          d => TextAnalysis.vocabStoreAppendTokens(s, Seq("<unk>"), d)),
+          Map("end_of_word" -> "</w>")))
+    families.foreach { case (name, steps, layout) =>
+      val dir = scratch(s"graft_props_${name.replace('+', '_')}_")
+      steps.foreach(_(dir))
+      val snaps = allSnapshots(dir)
+      assert(snaps.size === steps.size, s"$name: one commit per step")
+      snaps.foreach { snap =>
+        assert(!snap.tables.contains("meta"),
+          s"$name v${snap.version} lists a meta table")
+        assert(snap.props -- Watermarks === layout,
+          s"$name v${snap.version} layout props")
+      }
+      assert(!new java.io.File(dir).listFiles().exists(v =>
+        new java.io.File(v, "meta").exists), s"$name wrote a meta dir")
+    }
+  }
+
+  test("a manifest missing a layout prop fails loudly, naming the key " +
+    "and the rebuild") {
+    val s = spark
+    import s.implicits._
+    val dir = scratch("graft_props_missing_")
+    GraftOps.bm25IndexBuild(words(3, 10).toDF("doc_id", "text"), "doc_id",
+      "text", dir, nBuckets = 4)
+    // the commit an older build would have left: same tables, no layout
+    IndexStore.commit(s, dir, "stripProps") { (base, _) =>
+      (base.get.tables, Map.empty[String, String])
+    }
+    val e = intercept[IllegalStateException] {
+      GraftOps.bm25AgainstCorpus(Seq((1L, Seq("w1"))).toDF("qid", "terms"),
+        "qid", "terms", dir, 3)
+    }
+    assert(e.getMessage.contains("'n_buckets'"), e.getMessage)
+    assert(e.getMessage.contains("rebuild the index"), e.getMessage)
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("v2"),
+      e.getMessage)
+  }
+
+  test("manifest prop values round-trip any string — space, '%', '=', ':' " +
+    "— and a number is written as itself") {
+    val s = spark
+    import s.implicits._
+    val dir = scratch("graft_props_enc_")
+    val props = Map("odd" -> "a b%20=c:d\tz\n%", "fpp" -> "0.05",
+      "neg" -> "-3")
+    IndexStore.commit(s, dir, "encSpec") { (_, v) =>
+      Seq(1L).toDF("x").write.parquet(s"$dir/$v/rows")
+      (Map("rows" -> Seq(v)), props)
+    }
+    assert(IndexStore.resolve(s, dir).get.props === props)
+    val manifest = scala.io.Source.fromFile(s"$dir/_manifests/v00001.manifest")
+      .getLines().toSeq
+    assert(manifest.contains("prop fpp 0.05") && manifest.contains("prop neg -3"))
+    // the vocab store keeps a whitespace-bearing end-of-word marker
+    val train = words(4, 10).toDF("doc_id", "text")
+    val eow = "</ w%=:>"
+    val merges = TextAnalysis.bpeTrain(train, "text", 4, endOfWord = eow,
+      method = "local")
+    val vs = scratch("graft_props_eow_")
+    TextAnalysis.vocabStoreBuild(train, "text", merges, vs, endOfWord = eow)
+    def ids(df: DataFrame): Map[Long, Seq[Int]] =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    assert(ids(TextAnalysis.vocabStoreTokenize(train, "doc_id", "text", vs)) ===
+      ids(TextAnalysis.bpeTokenIds(
+        TextAnalysis.bpeEncode(train, "doc_id", "text", merges, eow),
+        "doc_id", "tokens", TextAnalysis.bpeVocab(train, "text", merges, eow))))
+  }
+
+  test("a batch sketch takes its shape from the snapshot it is given, " +
+    "not from a rebuild that committed after it") {
+    val s = spark
+    import s.implicits._
+    graft.GraftExtensions.register(s)
+    val docs = words(5, 12).toDF("doc_id", "text")
+    val batch = words(6, 4).toDF("doc_id", "text")
+    def bandsOf(sk: DataFrame): Set[Int] =
+      sk.select(size(col("sigs"))).as[Int].collect().toSet
+    val fp = scratch("graft_pin_fp_")
+    GraftOps.fingerprintBuild(docs, "doc_id", "text", fp, nHashes = 16,
+      bands = 4)
+    val a = IndexStore.resolve(s, fp).get
+    GraftOps.fingerprintBuild(docs, "doc_id", "text", fp, nHashes = 32,
+      bands = 8)
+    assert(bandsOf(GraftOps.indexSketch(batch, "doc_id", "text", a)) ===
+      Set(4))
+    // probing A with A's shape equals probing a fresh index of that shape
+    val same = scratch("graft_pin_same_")
+    GraftOps.fingerprintBuild(docs, "doc_id", "text", same, nHashes = 16,
+      bands = 4)
+    def ids(df: DataFrame): Set[Long] = df.select("doc_id").as[Long].collect().toSet
+    assert(ids(GraftOps.dedupNearSketched(batch, "doc_id",
+      GraftOps.indexSketch(batch, "doc_id", "text", a), fp, 80, None,
+      Some(a))) ===
+      ids(GraftOps.dedupNearAgainstCorpus(batch, "doc_id", "text", same)))
+    val emb = vectors(5, 12).toDF("vec_id", "embedding")
+    val srp = scratch("graft_pin_srp_")
+    GraftOps.srpIndexBuild(emb, "vec_id", "embedding", srp, dim = 4,
+      nBits = 16, bands = 4)
+    val sa = IndexStore.resolve(s, srp).get
+    GraftOps.srpIndexBuild(emb, "vec_id", "embedding", srp, dim = 4,
+      nBits = 32, bands = 8)
+    assert(bandsOf(GraftOps.srpIndexSketch(vectors(6, 3)
+      .toDF("vec_id", "embedding"), "vec_id", "embedding", sa, "pinSpec")) ===
+      Set(4))
   }
 
   test("the profile store records its bucket tables' shared schema once, " +

@@ -793,7 +793,7 @@ class TextVectorSpec extends SparkTestBase {
     GraftOps.digestIndexCompact(s, dir)
     val d = GraftOps.describeIndex(s, dir).collect()
       .map(r => r.getString(0) -> r).toMap
-    assert(d.keySet === Set("meta", "digests"))
+    assert(d.keySet === Set("digests"))
     assert(d("digests").getInt(1) === 1, "compact folds to one segment")
     assert(d("digests").getLong(2) === distinctBefore,
       "compact deduplicates to the distinct digest set")
@@ -923,7 +923,7 @@ class TextVectorSpec extends SparkTestBase {
     GraftOps.digestIndexCompact(s, dir)
     val d = GraftOps.describeIndex(s, dir).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(d.keySet === Set("meta", "digests"),
+    assert(d.keySet === Set("digests"),
       "compact drops the tombstones table from the manifest")
     assert(d("digests") === 1L,
       "only the re-ingested digest survives the fold")
@@ -1085,7 +1085,7 @@ class TextVectorSpec extends SparkTestBase {
     GraftOps.fingerprintCompact(s, dir)
     val d = GraftOps.describeIndex(s, dir).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(d.keySet === Set("meta", "docs", "bands"))
+    assert(d.keySet === Set("docs", "bands"))
     assert(d("docs") === 1L, "one live doc after the add/remove cycle")
     assert(sv2() === Set(30L))
     // null ids in a retract batch fail loudly (corpusDiff's stance)
@@ -1154,7 +1154,7 @@ class TextVectorSpec extends SparkTestBase {
       "the retracted vector no longer gates; the other still does")
     GraftOps.srpIndexCompact(s, dir)
     assert(GraftOps.describeIndex(s, dir).collect()
-      .map(_.getString(0)).toSet === Set("meta", "docs", "bands"))
+      .map(_.getString(0)).toSet === Set("docs", "bands"))
     assert(survivors() === Set(10L))
   }
 
@@ -2035,7 +2035,7 @@ class TextVectorSpec extends SparkTestBase {
     // vacuum reclaims every superseded segment: afterwards the whole
     // index dir holds exactly the live tables' files
     assert(GraftOps.indexVacuum(s, fpi).nonEmpty)
-    assert(parquetFiles(fpi) === 3, "post-vacuum: one file per table")
+    assert(parquetFiles(fpi) === 2, "post-vacuum: one file per table")
     // the compacted index still answers dedup queries
     assert(GraftOps.dedupNearAgainstCorpus(
       Seq(9L -> "alpha beta gamma").toDF("doc_id", "text"),
@@ -2975,10 +2975,9 @@ class TextVectorSpec extends SparkTestBase {
       "doc_id", "text", dir, maxTopWordRatio = 0.3, batchId = Some(7L))
     val d1 = GraftOps.describeIndex(s, dir).collect()
       .map(r => r.getString(0) -> r).toMap
-    assert(d1.keySet === Set("meta", "docs", "bands"))
+    assert(d1.keySet === Set("docs", "bands"))
     assert(d1("docs").getInt(1) === 2, "build + one append = two segments")
     assert(d1("docs").getLong(2) === 2L)
-    assert(d1("meta").getInt(1) === 1, "meta never accretes")
     assert(d1("docs").getString(4) === "7" &&
       d1("docs").getString(5) === "1", "watermark props ride the rows")
     GraftOps.fingerprintCompact(s, dir)
