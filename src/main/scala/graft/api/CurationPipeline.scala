@@ -355,7 +355,7 @@ object CurationPipeline {
     else {
       val pinned = survivors.localCheckpoint(true)
       if (appendToIndex && fPre.isEmpty)
-        GraftOps.fingerprintAppendSketch(sk, indexDir, batchId)
+        GraftOps.fingerprintAppendSketch(sk, probeSnap, indexDir, batchId)
       if (appendToIndex && dPre.isEmpty)
         digestDir.foreach(dd => GraftOps.digestAppendDigests(
           prefiltered.select(md5(col(textCol)).as("digest"))

@@ -305,30 +305,24 @@ object GraftOps {
     gramDelta(batch, textCol, indexDir, "gramIndexRetract", negate = true)
 
   private def gramDelta(batch: DataFrame, textCol: String, indexDir: String,
-      op: String, negate: Boolean): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"$op: no index at $indexDir — build one with gramIndexBuild first"))
+      op: String, negate: Boolean): Unit =
+    deltaCommit(batch.sparkSession, indexDir, op, "gram", "gramIndexBuild",
+        batchId = None, negate, batch.isEmpty) { (base, v) =>
       writeBucketedOrEmpty(
         gramCounts(batch, textCol, base.prop("k").toInt,
           base.prop("n_buckets").toInt, op, negate),
         s"$indexDir/$v/grams")
-      (base.tables + ("grams" -> (base.tables("grams") :+ v)), base.props)
+      GramTables
     }
-    ()
-  }
 
   /** Fold a gram index's segment chain into one: sum counts per window
     * hash, drop net-nonpositive rows (retracted content leaves the
-    * physical index here), rewrite bucketed. */
+    * physical index here), rewrite bucketed ([[compactCommit]]). */
   def gramIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commitWithRetry(spark, indexDir, "gramIndexCompact") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"gramIndexCompact: no index at $indexDir"))
+      indexDir: String): Unit =
+    compactCommit(spark, indexDir, "gramIndexCompact", "gram",
+        "gramIndexBuild") {
+      (base, v) =>
         // bucket is a pure function of h, so any per-group representative
         // (max) reproduces it without re-deriving it from the layout
         writeBucketedOrEmpty(
@@ -338,10 +332,8 @@ object GraftOps {
             .filter(col("cnt") > 0)
             .select("h", "cnt", "bucket"),
           s"$indexDir/$v/grams")
-        (GramTables.map(_ -> Seq(v)).toMap, base.props)
+        GramTables
     }
-    ()
-  }
 
   /** Incremental [[substringScrub]] — scrub an arriving batch against a
     * persisted [[gramIndexBuild]] corpus WITHOUT re-reading the corpus:
@@ -654,11 +646,12 @@ object GraftOps {
     * One [[IndexStore]] commit: the new docs/bands segments publish
     * together, atomically — a concurrent search sees both or neither. */
   def fingerprintAppend(fresh: DataFrame, idCol: String, textCol: String,
-      indexDir: String): Unit =
-    fingerprintAppendSketch(indexSketch(fresh, idCol, textCol,
-        indexSnapshot(fresh.sparkSession, indexDir, "fingerprint",
-          "fingerprintBuild")),
+      indexDir: String): Unit = {
+    val snap = indexSnapshot(fresh.sparkSession, indexDir, "fingerprint",
+      "fingerprintBuild")
+    fingerprintAppendSketch(indexSketch(fresh, idCol, textCol, snap), snap,
       indexDir)
+  }
 
   /** A batch sketched with the shape snapshot `snap` records,
     * materialized once behind a lazy local checkpoint — the shareable
@@ -675,49 +668,47 @@ object GraftOps {
         snap.prop("bands").toInt, spread = false)
       .localCheckpoint(false)
 
-  /** [[fingerprintAppend]] over a prebuilt [[indexSketch]]. `batchId`
-    * (from [[CurationPipeline.curateIncremental]]'s foreachBatch slot)
+  /** [[fingerprintAppend]] over a prebuilt [[indexSketch]] made with
+    * the shape `shape` records. `batchId` (from
+    * [[CurationPipeline.curateIncremental]]'s foreachBatch slot)
     * records the replay watermark in the manifest: `last_batch` = the
     * id, `last_batch_base` = the pre-append manifest version a replay
     * must dedup against. */
   private[api] def fingerprintAppendSketch(sk: DataFrame,
-      indexDir: String, batchId: Option[Long] = None): Unit =
-    bandAppendSketch(sk, indexDir, batchId, "fingerprintAppend",
+      shape: IndexStore.Snapshot, indexDir: String,
+      batchId: Option[Long] = None): Unit =
+    bandAppendSketch(sk, shape, indexDir, batchId, "fingerprintAppend",
+      "fingerprint", "fingerprintBuild",
       sk.select(col("doc_id"), col("sz"),
         posexplode(col("sigs")).as(Seq("band", "sig"))))
 
-  /** The shared append commit of both band-index families: one
-    * [[IndexStore]] version holding the batch's docs + bands segments,
-    * the replay watermark recorded when the caller runs under a
-    * streaming batch id. An EMPTY batch is a no-op, [[ivfAppend]]'s
-    * stance exactly (no version churn, no empty segments from routine
-    * empty micro-batches); the watermark is deliberately NOT advanced
-    * for it — replaying an empty batch re-runs this same no-op, so
-    * idempotence holds without a commit. Committed through
-    * [[IndexStore.commitWithRetry]]: appends derive only from the
-    * batch plus the base snapshot the callback receives, so a loser
-    * to a concurrent compact/append recommits correctly against the
-    * winner's snapshot instead of surfacing the claim race to the
-    * single-writer caller. */
-  private def bandAppendSketch(sk: DataFrame, indexDir: String,
-      batchId: Option[Long], op: String, bandRows: DataFrame): Unit = {
-    if (sk.isEmpty) return
-    swallowReplay(IndexStore.commitWithRetry(sk.sparkSession, indexDir, op) { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"$op: no index at $indexDir — build one first"))
-      // in-commit replay gate ([[skipIfReplayed]]): the composed dedup
-      // steps check replayBase OUTSIDE, which a zombie-writer race can
-      // slip past — the base snapshot here is read under the claim
-      skipIfReplayed(base, batchId, op, negate = false)
+  /** The shared append of both band-index families: one
+    * [[deltaCommit]] holding the batch's docs + bands segments. The
+    * batch was sketched BEFORE the claim, in the shape of snapshot
+    * `shape`; a base that the claim resolves with another layout (a
+    * rebuild committed in between) fails loudly instead of receiving
+    * rows whose signatures disagree with the index. */
+  private def bandAppendSketch(sk: DataFrame, shape: IndexStore.Snapshot,
+      indexDir: String, batchId: Option[Long], op: String, what: String,
+      builder: String, bandRows: DataFrame): Unit =
+    deltaCommit(sk.sparkSession, indexDir, op, what, builder, batchId,
+        negate = false, sk.isEmpty) { (base, v) =>
+      val (was, now) = (layoutOf(shape), layoutOf(base))
+      if (was != now) throw new IllegalStateException(
+        s"$op: the batch was sketched for the $what index layout $was " +
+          s"(v${shape.version}), but the index at $indexDir now records " +
+          s"$now (v${base.version}) — it was rebuilt in between; re-run " +
+          "the step so the batch is sketched against the rebuilt index")
       sk.write.parquet(s"$indexDir/$v/docs")
       bandRows.write.parquet(s"$indexDir/$v/bands")
-      (base.tables
-        + ("docs" -> (base.tables("docs") :+ v))
-        + ("bands" -> (base.tables("bands") :+ v)),
-        base.props ++ batchProps(batchId, base.version, negate = false))
-    })
-    ()
-  }
+      BandTables
+    }
+
+  /** A snapshot's layout props — every prop but the replay watermarks —
+    * rendered `(k=v, ...)` in key order. */
+  private def layoutOf(snap: IndexStore.Snapshot): String =
+    (snap.props -- Seq("last_batch", "last_batch_base", "last_retract"))
+      .toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")")
 
   /** The band-index logical tables (fingerprint and SRP share the
     * layout; IVF has its own pair). */
@@ -763,29 +754,17 @@ object GraftOps {
   private def indexRetractIds(removed: DataFrame, idCol: String,
       indexDir: String, op: String, what: String, builder: String,
       keyCol: String, batchId: Option[Long] = None): Unit = {
-    val spark = removed.sparkSession
-    val snap = indexSnapshot(spark, indexDir, what, builder)
-    if (retractReplayed(snap, batchId, op)) return
     val ids = removed.select(
         when(col(idCol).isNull,
           raise_error(lit(s"$op: null id '$idCol' in the retract batch — " +
             "a null id matches nothing and hides a wiring bug")))
           .otherwise(col(idCol)).as(keyCol))
       .distinct().localCheckpoint(false)
-    if (ids.isEmpty) return
-    swallowReplay(IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"$op: no $what index at $indexDir — build one with $builder first"))
-      // in-commit replay gate — see [[skipIfReplayed]] (the zombie-
-      // writer hole of the outside-only check)
-      skipIfReplayed(base, batchId, op, negate = true)
+    deltaCommit(removed.sparkSession, indexDir, op, what, builder, batchId,
+        negate = true, ids.isEmpty) { (_, v) =>
       ids.write.parquet(s"$indexDir/$v/tombstones")
-      (base.tables + ("tombstones" ->
-          (base.tables.getOrElse("tombstones", Nil) :+ v)),
-        base.props ++ batchId.map(b => Map("last_retract" -> b.toString))
-          .getOrElse(Map.empty))
-    })
-    ()
+      Seq("tombstones")
+    }
   }
 
   /** An id-keyed index table minus its sequenced tombstones — the
@@ -853,27 +832,32 @@ object GraftOps {
     * named rather than misreported as "no index". */
   private[api] def indexSnapshot(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, what: String, builder: String): IndexStore.Snapshot =
-    IndexStore.resolve(spark, indexDir).getOrElse {
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val legacy = Seq("docs", "centroids").exists(t =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$t")))
-      throw new IllegalArgumentException(
-        if (legacy)
-          s"the $what index at $indexDir uses the pre-versioning layout " +
-            s"(no _manifests dir) — rebuild it with $builder under this " +
-            "release's snapshot protocol"
-        else s"no $what index at $indexDir — build one with $builder first")
-    }
+    IndexStore.resolve(spark, indexDir)
+      .getOrElse(noIndex(spark, indexDir, what, builder))
+
+  /** [[indexSnapshot]]'s failure: `indexDir` holds no index. */
+  private def noIndex(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, what: String, builder: String): Nothing = {
+    val fs = new org.apache.hadoop.fs.Path(indexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val legacy = Seq("docs", "centroids").exists(t =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$t")))
+    throw new IllegalArgumentException(
+      if (legacy)
+        s"the $what index at $indexDir uses the pre-versioning layout " +
+          s"(no _manifests dir) — rebuild it with $builder under this " +
+          "release's snapshot protocol"
+      else s"no $what index at $indexDir — build one with $builder first")
+  }
 
   /** Compact a [[fingerprintBuild]] index: every [[fingerprintAppend]]
     * adds at least one segment (≥ 1 parquet file) per table, so a
     * long-running micro-batch ingest accretes thousands of small files
     * and the candidate join's scan goes metadata-bound. One
-    * [[IndexStore]] commit rewrites all tables into `filesPerTable`
-    * files each (rows unchanged — spec-pinned) in a fresh version dir
-    * and publishes atomically: in-flight searches keep their resolved
-    * snapshot, the superseded segments stay on disk until
+    * [[compactCommit]] rewrites docs and bands into `filesPerTable`
+    * files each (live rows unchanged — spec-pinned) in a fresh version
+    * dir and drops the tombstones: in-flight searches keep their
+    * resolved snapshot, the superseded segments stay on disk until
     * [[indexVacuum]], and the replay watermark carries forward. A crash
     * at ANY point leaves the live index untouched (the unpublished
     * version is unreferenced; its CLAIM residue makes the next writer
@@ -895,20 +879,15 @@ object GraftOps {
       indexDir: String, filesPerTable: Int, op: String, what: String,
       builder: String, keyCol: String): Unit = {
     require(filesPerTable >= 1, "files per table must be >= 1")
-    IndexStore.commit(spark, indexDir, op) { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"no $what index at $indexDir — build one with $builder first"))
-      // docs/bands rewrite retraction-aware (liveIndexTable) and the
-      // tombstones table is dropped from the new manifest — the fold
-      // that returns probes to zero tombstone overhead; the LIVE row
-      // set is unchanged (spec-pinned)
+    compactCommit(spark, indexDir, op, what, builder) { (base, v) =>
+      // retraction-aware rewrite: the LIVE row set is unchanged
+      // (spec-pinned)
       BandTables.foreach { t =>
         liveIndexTable(spark, indexDir, base, t, keyCol)
           .repartition(filesPerTable).write.parquet(s"$indexDir/$v/$t")
       }
-      (BandTables.map(_ -> Seq(v)).toMap, base.props)
+      BandTables
     }
-    ()
   }
 
   /** [[fingerprintCompact]]'s twin for the [[ivfBuild]] index: appends
@@ -916,27 +895,22 @@ object GraftOps {
     * back to the BUILD's layout — one file per list (rows of a list
     * land in one task, exactly ivfBuild's repartition(bucket) shape),
     * keeping the bucket-partitioned dirs and so [[ivfSearch]]'s
-    * partition pruning. Same [[IndexStore]] commit contract as
+    * partition pruning. The frozen `centroids` table is carried
+    * forward, never rewritten. Same [[compactCommit]] contract as
     * [[fingerprintCompact]]: atomic publish, snapshot-isolated readers,
     * superseded segments reclaimed by [[indexVacuum]]. */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commit(spark, indexDir, "ivfCompact") { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"no IVF index at $indexDir — build one with ivfBuild first"))
-      IndexStore.readTable(spark, indexDir, base, "centroids")
-        .coalesce(1).write.parquet(s"$indexDir/$v/centroids")
-      // retraction-aware fold: [[ivfRetract]] tombstones drop here and
-      // the table leaves the manifest (the band compacts' contract);
-      // a fully-retracted corpus folds to a schema-bearing EMPTY
-      // segment, never a fileless one ([[writeBucketedOrEmpty]])
-      writeBucketedOrEmpty(
-        liveIndexTable(spark, indexDir, base, "corpus", "vid"),
-        s"$indexDir/$v/corpus")
-      (Map("centroids" -> Seq(v), "corpus" -> Seq(v)), base.props)
+      indexDir: String): Unit =
+    compactCommit(spark, indexDir, "ivfCompact", "IVF", "ivfBuild") {
+      (base, v) =>
+        // retraction-aware fold; a fully-retracted corpus folds to a
+        // schema-bearing EMPTY segment, never a fileless one
+        // ([[writeBucketedOrEmpty]])
+        writeBucketedOrEmpty(
+          liveIndexTable(spark, indexDir, base, "corpus", "vid"),
+          s"$indexDir/$v/corpus")
+        Seq("corpus")
     }
-    ()
-  }
 
   /** RETRACT vectors (by id) from an [[ivfBuild]] index —
     * [[fingerprintRetract]]'s ANN sibling, completing the family claim
@@ -955,32 +929,32 @@ object GraftOps {
     indexRetractIds(removed, idCol, indexDir, "ivfRetract",
       "IVF", "ivfBuild", "vid", batchId)
 
-  /** Reclaim disk from a persistent index ([[fingerprintBuild]] /
-    * [[srpIndexBuild]] / [[ivfBuild]] — they share the [[IndexStore]]
-    * layout): delete every version dir, manifest, and stale CLAIM that
-    * no RETAINED snapshot references. Retained: the newest
-    * `keepVersions` manifests (default 1 = just the latest), plus —
-    * always, regardless of `keepVersions` — the replay-base manifest
-    * the latest `last_batch_base` watermark names and its segments, so
-    * a cron'd vacuum can never strand a foreachBatch crash-replay
-    * ([[CurationPipeline.curateIncremental]]'s batchId path replays
-    * against that snapshot). `keepVersions = N` is the reader-horizon
-    * knob: a reader that resolved its snapshot up to N−1 publishes ago
-    * survives the vacuum; older readers fail loudly at read time.
-    * Returns the deleted names. */
+  /** Reclaim disk from a persistent index (any family — they share
+    * the [[IndexStore]] layout): delete every version dir, manifest,
+    * and stale CLAIM that no RETAINED snapshot references. Retained:
+    * the newest `keepVersions` manifests (default 1 = just the latest),
+    * plus — always, regardless of `keepVersions` — the replay-base
+    * manifest the latest `last_batch_base` watermark names and its
+    * segments, so a cron'd vacuum can never strand a foreachBatch
+    * crash-replay ([[CurationPipeline.curateIncremental]]'s batchId
+    * path replays against that snapshot). `keepVersions = N` is the
+    * reader-horizon knob: a reader that resolved its snapshot up to N−1
+    * publishes ago survives the vacuum; older readers fail loudly at
+    * read time. Returns the deleted names. */
   def indexVacuum(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, keepVersions: Int = 1): Seq[String] =
     IndexStore.vacuum(spark, indexDir, keepVersions)
 
-  /** Operational summary of a persistent index (any of the three
-    * families — the DESCRIBE a production operator runs before/after a
-    * compact or when debugging a replay): one row per logical table
-    * with its live segment count and row count, plus the snapshot
-    * version and the replay watermark props on every row. Segment
-    * counts are the compaction signal (a long-running micro-batch
-    * ingest accretes one per append); `last_batch`/`last_batch_base`
-    * are the crash-replay state ([[CurationPipeline.curateIncremental]]).
-    * Cost: O(manifest) driver-side plus one count job per table. */
+  /** Operational summary of a persistent index (any family on the
+    * [[IndexStore]] — the DESCRIBE a production operator runs
+    * before/after a compact or when debugging a replay): one row per
+    * logical table with its live segment count and row count, plus the
+    * snapshot version and the replay watermark props on every row.
+    * Segment counts are the compaction signal (a long-running
+    * micro-batch ingest accretes one per append);
+    * `last_batch`/`last_batch_base` are the crash-replay state
+    * ([[CurationPipeline.curateIncremental]]). Cost: O(manifest)
+    * driver-side plus one count job per table. */
   def describeIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
     import spark.implicits._
@@ -1101,8 +1075,8 @@ object GraftOps {
     * history already holds; reads are set-semantics (anti-join), so
     * duplicates cost only segment bytes until [[digestIndexCompact]]
     * folds them. Empty batches are a no-op ([[ivfAppend]]'s stance —
-    * no version churn). Committed through
-    * [[IndexStore.commitWithRetry]] like the band appends. */
+    * no version churn). Committed through [[deltaCommit]] like every
+    * append. */
   def digestIndexAppend(fresh: DataFrame, textCol: String,
       indexDir: String): Unit =
     digestAppendDigests(
@@ -1114,19 +1088,14 @@ object GraftOps {
     * (`last_batch` / `last_batch_base`) exactly as
     * [[fingerprintAppendSketch]] does. */
   private[api] def digestAppendDigests(dg: DataFrame, indexDir: String,
-      batchId: Option[Long] = None): Unit = {
-    if (dg.isEmpty) return
-    val spark = dg.sparkSession
-    IndexStore.commitWithRetry(spark, indexDir, "digestIndexAppend") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"digestIndexAppend: no index at $indexDir — build one with " +
-            "digestIndexBuild first"))
+      batchId: Option[Long] = None): Unit =
+    deltaCommit(dg.sparkSession, indexDir, "digestIndexAppend", "digest",
+        "digestIndexBuild", batchId, negate = false, dg.isEmpty) {
+      (base, v) =>
         // layout from the CLOSURE's base snapshot: a retry against a
         // concurrently REBUILT index (different nBuckets) must bucket
         // its rows under the winner's layout, or the pruned probe and
-        // compact scans would silently miss them (clusterIndexAppend's
-        // rule)
+        // compact scans would silently miss them
         val nBuckets = base.prop("n_buckets").toInt
         val fppOpt = base.props.get("bloom_fpp").map(_.toDouble)
         val dgb = dg.filter(col("digest").isNotNull)
@@ -1140,16 +1109,8 @@ object GraftOps {
         // segment's digests (probe ORs per-bucket across segments)
         fppOpt.foreach(f =>
           writeBloomSegment(dgb, f, s"$indexDir/$v/blooms"))
-        (base.tables + ("digests" -> (base.tables("digests") :+ v)) ++
-          fppOpt.map(_ => "blooms" ->
-            (base.tables.getOrElse("blooms", Nil) :+ v)),
-          base.props ++ batchId.map(b => Map(
-            "last_batch" -> b.toString,
-            "last_batch_base" -> base.version.toString))
-            .getOrElse(Map.empty))
+        DigestTables ++ fppOpt.map(_ => "blooms")
     }
-    ()
-  }
 
   /** RETRACT content digests from a [[digestIndexBuild]] index — the
     * erasure half of the index lifecycle ([[corpusDiff]]'s `removed`
@@ -1182,14 +1143,14 @@ object GraftOps {
     * Retracting a digest the index never held is a harmless no-op at
     * read time (set semantics). Null text digests to null and is
     * skipped, [[digestIndexAppend]]'s convention. Empty batches are a
-    * no-op (no version churn). Committed through
-    * [[IndexStore.commitWithRetry]]; `batchId` records the RETRACT
-    * replay watermark (`last_retract` — deliberately separate from the
-    * append watermark `last_batch`, so a micro-batch that retracts AND
-    * appends crashes between the two commits and still converges on
-    * replay: the retract skips, the append proceeds). A replayed
-    * retract (batchId at the watermark) is a committed no-op; below the
-    * watermark fails loudly (two retract writers on one index). */
+    * no-op (no version churn). Committed through [[deltaCommit]];
+    * `batchId` records the RETRACT replay watermark (`last_retract` —
+    * deliberately separate from the append watermark `last_batch`, so
+    * a micro-batch that retracts AND appends crashes between the two
+    * commits and still converges on replay: the retract skips, the
+    * append proceeds). A replayed retract (batchId at the watermark)
+    * is a committed no-op; below the watermark fails loudly (two
+    * retract writers on one index). */
   def digestIndexRetract(removed: DataFrame, textCol: String,
       indexDir: String, batchId: Option[Long] = None): Unit =
     digestRetractDigests(
@@ -1202,24 +1163,10 @@ object GraftOps {
     * directly. */
   private[api] def digestRetractDigests(dg: DataFrame, indexDir: String,
       batchId: Option[Long] = None): Unit = {
-    val spark = dg.sparkSession
-    val snap = indexSnapshot(spark, indexDir, "digest", "digestIndexBuild")
-    if (retractReplayed(snap, batchId, "digestIndexRetract")) return
     val dgClean = dg.filter(col("digest").isNotNull)
-    if (dgClean.isEmpty) return
-    swallowReplay(
-      IndexStore.commitWithRetry(spark, indexDir, "digestIndexRetract") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"digestIndexRetract: no index at $indexDir — build one with " +
-            "digestIndexBuild first"))
-        // in-commit replay gate ([[skipIfReplayed]]): the outer
-        // retractReplayed check alone has the zombie-writer hole — two
-        // drivers replaying one batch both pass it, and the loser's
-        // retried callback would commit the tombstones a SECOND time
-        // at a later sequence version, killing a legitimately
-        // re-appended digest (tombstones are sequenced)
-        skipIfReplayed(base, batchId, "digestIndexRetract", negate = true)
+    deltaCommit(dg.sparkSession, indexDir, "digestIndexRetract", "digest",
+        "digestIndexBuild", batchId, negate = true, dgClean.isEmpty) {
+      (base, v) =>
         // layout from the CLOSURE's base snapshot (same hazard as the
         // append): tombstones bucketed under a stale layout after a
         // concurrent rebuild would be invisible to the pruned
@@ -1229,36 +1176,36 @@ object GraftOps {
           .withColumn("bucket", digestBucket(col("digest"), nBuckets))
           .transform(bucketExchange)
           .write.partitionBy("bucket").parquet(s"$indexDir/$v/tombstones")
-        (base.tables + ("tombstones" ->
-            (base.tables.getOrElse("tombstones", Nil) :+ v)),
-          base.props ++ batchId.map(b => Map("last_retract" -> b.toString))
-            .getOrElse(Map.empty))
-    })
-    ()
+        Seq("tombstones")
+    }
   }
 
-  /** The append-side replay decision for PLAIN store appends (ivf /
-    * ivfPq / bm25 / clf) on the `last_batch` watermark: true = this
-    * batchId's append already committed (its segment is in the index),
-    * so the caller returns without a second commit — a replayed append
-    * would otherwise double its rows (bm25 postings and clf features
-    * are SUMMED per key, so the corruption is silent until a fold-time
-    * contract check fires). Unlike the incremental DEDUP steps, which
-    * must re-derive their first attempt's survivors against the
-    * recorded pre-append base ([[replayBase]]), a plain append has no
-    * result to reproduce: skipping IS the whole replay story. Below
-    * the watermark fails loudly ([[replayBase]]'s wiring-bug stance). */
-  private[api] def appendReplayed(snap: IndexStore.Snapshot,
-      batchId: Option[Long], op: String): Boolean =
+  /** The replay decision of a batch-driven append (`negate = false`,
+    * on the `last_batch` watermark) or retract (`negate = true`, on the
+    * SEPARATE `last_retract` watermark): true = this batchId's delta
+    * already committed, so the caller must not commit it again — a
+    * replayed append would double its rows (bm25 postings, clf
+    * features and DSIR/LM counts are SUMMED per key, so the corruption
+    * is silent), a replayed retract would write tombstones at a later
+    * sequence version and kill a legitimately re-appended row. Unlike
+    * the incremental DEDUP steps, which must re-derive their first
+    * attempt's survivors against the recorded pre-append base
+    * ([[replayBase]]), a plain delta has no result to reproduce:
+    * skipping IS the whole replay story. Below the watermark fails
+    * loudly ([[replayBase]]'s wiring-bug stance). */
+  private[api] def deltaReplayed(snap: IndexStore.Snapshot,
+      batchId: Option[Long], op: String, negate: Boolean): Boolean =
     batchId.exists { b =>
-      snap.props.get("last_batch").map(_.toLong) match {
-        case Some(lb) if b < lb =>
+      val (key, kind) =
+        if (negate) ("last_retract", "retract") else ("last_batch", "append")
+      snap.props.get(key).map(_.toLong) match {
+        case Some(w) if b < w =>
           throw new IllegalArgumentException(
-            s"$op: batch id $b is below the append replay watermark $lb — " +
+            s"$op: batch id $b is below the $kind replay watermark $w — " +
               "batch ids must be nondecreasing (a foreachBatch engine only " +
               "ever replays the last committed batch, so a lower id means " +
-              "two writers share this index)")
-        case Some(lb) => b == lb
+              s"two $kind writers share this index)")
+        case Some(w) => b == w
         case None => false
       }
     }
@@ -1286,47 +1233,79 @@ object GraftOps {
     * alone has a zombie-writer hole — two drivers replaying the same
     * batch both pass the outside gate, the loser's commitWithRetry
     * re-runs its callback against the winner's fresh base and commits
-    * the batch a SECOND time (postings/features are summed per key, so
-    * the duplication is silent). Calling this first thing inside the
+    * the batch a SECOND time. Calling this first thing inside the
     * callback closes it: the base snapshot the callback receives is
     * resolved under the claim, so the winner's watermark is visible
-    * there. The outer pre-check stays as a cheap fast path that avoids
+    * there. The pre-commit check stays as a cheap fast path that avoids
     * claim churn on the common single-writer replay. */
   private[api] def skipIfReplayed(base: IndexStore.Snapshot,
       batchId: Option[Long], op: String, negate: Boolean): Unit =
     if (deltaReplayed(base, batchId, op, negate))
       throw new ReplaySkipException
 
-  /** [[skipIfReplayed]]'s boolean form — the pre-commit fast path. */
-  private[api] def deltaReplayed(snap: IndexStore.Snapshot,
-      batchId: Option[Long], op: String, negate: Boolean): Boolean =
-    if (negate) retractReplayed(snap, batchId, op)
-    else appendReplayed(snap, batchId, op)
-
   /** Runs a batch-driven commit, treating [[ReplaySkipException]] as
     * the documented no-op. */
   private[api] def swallowReplay(body: => Unit): Unit =
     try body catch { case _: ReplaySkipException => () }
 
-  /** The retract-side replay decision — [[replayBase]]'s shape on the
-    * SEPARATE `last_retract` watermark (a retract commits no snapshot a
-    * replay must time-travel to — it only needs skipping): true = this
-    * batchId's retract already committed, the caller returns without a
-    * commit; below the watermark fails loudly. */
-  private def retractReplayed(snap: IndexStore.Snapshot,
-      batchId: Option[Long], op: String): Boolean =
-    batchId.exists { b =>
-      snap.props.get("last_retract").map(_.toLong) match {
-        case Some(lr) if b < lr =>
-          throw new IllegalArgumentException(
-            s"$op: batch id $b is below the retract replay watermark $lr — " +
-              "batch ids must be nondecreasing (a foreachBatch engine only " +
-              "ever replays the last committed batch, so a lower id means " +
-              "two retract writers share this index)")
-        case Some(lr) => b == lr
-        case None => false
-      }
+  /** The one commit body of every index family's append and retract
+    * (all but [[packIndexAppend]], whose replay re-derives offsets from
+    * a past snapshot). In order:
+    *  1. the pre-commit replay fast path ([[deltaReplayed]] on the
+    *     latest snapshot) — BEFORE the emptiness shortcut, so a
+    *     below-watermark batch id (two writers on one index) fails
+    *     loudly even on an empty trigger, and a missing index fails
+    *     with [[indexSnapshot]]'s builder-naming message;
+    *  2. an empty batch (`isEmpty`) is a no-op: no version churn, no
+    *     empty segment, the watermark deliberately not advanced —
+    *     replaying it re-runs the same no-op;
+    *  3. [[IndexStore.commitWithRetry]]: a delta derives only from the
+    *     batch plus the base the callback receives, so a loser to a
+    *     concurrent writer recommits against the winner's snapshot;
+    *  4. the in-commit replay gate ([[skipIfReplayed]]) on the base
+    *     resolved under the claim;
+    *  5. `write(base, vdir)` writes the delta's segments and returns
+    *     the tables it wrote; each gains segment `vdir`, every other
+    *     table is carried unchanged;
+    *  6. the base props carry forward, plus the batch's watermark
+    *     ([[batchProps]]). */
+  private[api] def deltaCommit(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, op: String, what: String, builder: String,
+      batchId: Option[Long], negate: Boolean, isEmpty: => Boolean)(
+      write: (IndexStore.Snapshot, String) => Seq[String]): Unit = {
+    if (deltaReplayed(indexSnapshot(spark, indexDir, what, builder),
+        batchId, op, negate) || isEmpty) return
+    swallowReplay(IndexStore.commitWithRetry(spark, indexDir, op) {
+      (baseOpt, v) =>
+        val base = baseOpt.getOrElse(noIndex(spark, indexDir, what, builder))
+        skipIfReplayed(base, batchId, op, negate)
+        val wrote = write(base, v)
+        (base.tables ++
+          wrote.map(t => t -> (base.tables.getOrElse(t, Nil) :+ v)),
+          base.props ++ batchProps(batchId, base.version, negate))
+    })
+  }
+
+  /** The one commit body of every index family's compact, through
+    * [[IndexStore.commitWithRetry]] (a compact derives only from its
+    * base, so a retry against a concurrent writer's snapshot is safe).
+    * `write(base, vdir)` rewrites tables from the base and returns
+    * their names; each becomes the single segment `vdir`. Every other
+    * base table is CARRIED FORWARD unchanged (frozen tables such as
+    * IVF centroids and IVF-PQ codebooks are never rewritten) except
+    * `tombstones`, which a compact folds and drops. The base props
+    * (layout and replay watermarks) carry forward. A missing index
+    * fails with [[indexSnapshot]]'s builder-naming message. */
+  private[api] def compactCommit(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, op: String, what: String, builder: String)(
+      write: (IndexStore.Snapshot, String) => Seq[String]): Unit = {
+    IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
+      val base = baseOpt.getOrElse(noIndex(spark, indexDir, what, builder))
+      val wrote = write(base, v)
+      (base.tables - "tombstones" ++ wrote.map(_ -> Seq(v)), base.props)
     }
+    ()
+  }
 
   /** A history table minus its SEQUENCED tombstones — the merge-on-read
     * subtraction every retraction-aware reader runs: a tombstone kills
@@ -1665,7 +1644,7 @@ object GraftOps {
     * tombstones table is dropped from the manifest, so post-compact
     * probes pay zero tombstone overhead again. The LIVE digest set is
     * unchanged by the fold (spec-pinned); segment and file counts drop
-    * to one per touched bucket. Same [[IndexStore]] commit contract:
+    * to one per touched bucket. Same [[compactCommit]] contract:
     * atomic publish, snapshot-isolated readers, props (including the
     * replay watermarks) carried forward.
     *
@@ -1688,11 +1667,9 @@ object GraftOps {
     * drops exactly the digests whose last true build/append predates
     * it (spec-pinned). */
   def digestIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, retainFromVersion: Option[Int] = None): Unit = {
-    IndexStore.commit(spark, indexDir, "digestIndexCompact") { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"no digest index at $indexDir — build one with digestIndexBuild " +
-          "first"))
+      indexDir: String, retainFromVersion: Option[Int] = None): Unit =
+    compactCommit(spark, indexDir, "digestIndexCompact", "digest",
+        "digestIndexBuild") { (base, v) =>
       // the horizon guard compares against the newest DIGEST-WRITING
       // segment, not the manifest version: retract/compact commits
       // advance the version chain without writing digests, so a
@@ -1739,11 +1716,8 @@ object GraftOps {
       // (blooms cannot forget incrementally)
       fppOpt.foreach(f =>
         writeBloomSegment(kept, f, s"$indexDir/$v/blooms"))
-      ((DigestTables ++ fppOpt.map(_ => "blooms"))
-        .map(_ -> Seq(v)).toMap, base.props)
+      DigestTables ++ fppOpt.map(_ => "blooms")
     }
-    ()
-  }
 
   /** Incremental NEAR-dup dedup against a persisted [[fingerprintBuild]]
     * index — the near-dup half of [[dedupAgainstCorpus]]'s incremental
@@ -2413,12 +2387,13 @@ object GraftOps {
     * exactly [[fingerprintAppend]]'s contract and for the same reason:
     * later batches must measure against every vector already seen. */
   def srpIndexAppend(fresh: DataFrame, idCol: String, vecCol: String,
-      indexDir: String): Unit =
+      indexDir: String): Unit = {
+    val snap = indexSnapshot(fresh.sparkSession, indexDir, "SRP embedding",
+      "srpIndexBuild")
     srpIndexAppendSketch(
-      srpIndexSketch(fresh, idCol, vecCol,
-        indexSnapshot(fresh.sparkSession, indexDir, "SRP embedding",
-          "srpIndexBuild"), "srpIndexAppend"),
+      srpIndexSketch(fresh, idCol, vecCol, snap, "srpIndexAppend"), snap,
       indexDir)
+  }
 
   /** A batch SRP-sketched with the parameters snapshot `snap` records,
     * materialized once behind a lazy local checkpoint — [[indexSketch]]'s
@@ -2434,12 +2409,15 @@ object GraftOps {
       .select(col("vec_id"), col("nrm"), col("emb"), col("sigs"))
       .localCheckpoint(false)
 
-  /** [[srpIndexAppend]] over a prebuilt [[srpIndexSketch]] — the same
-    * atomic [[IndexStore]] commit (and optional replay watermark) as
+  /** [[srpIndexAppend]] over a prebuilt [[srpIndexSketch]] made with
+    * the parameters `shape` records — the same atomic commit, shape
+    * check and optional replay watermark as
     * [[fingerprintAppendSketch]]. */
   private[api] def srpIndexAppendSketch(sk: DataFrame,
-      indexDir: String, batchId: Option[Long] = None): Unit =
-    bandAppendSketch(sk, indexDir, batchId, "srpIndexAppend",
+      shape: IndexStore.Snapshot, indexDir: String,
+      batchId: Option[Long] = None): Unit =
+    bandAppendSketch(sk, shape, indexDir, batchId, "srpIndexAppend",
+      "SRP embedding", "srpIndexBuild",
       sk.select(col("vec_id"),
         posexplode(col("sigs")).as(Seq("band", "sig"))))
 
@@ -2472,7 +2450,7 @@ object GraftOps {
       case None =>
         val pinned = dedupEmbSketched(fresh, idCol, sk, indexDir, minCosine,
           maxBucketSize, Some(snap)).localCheckpoint(true)
-        srpIndexAppendSketch(sk, indexDir, batchId)
+        srpIndexAppendSketch(sk, snap, indexDir, batchId)
         pinned
     }
   }
@@ -2916,7 +2894,7 @@ object GraftOps {
     * compacts the contract is still the caller's (dedupApply the
     * stream by id first). `batchId` is the shared
     * foreachBatch replay watermark: a re-delivered id is a NO-OP
-    * ([[appendReplayed]] — a replayed append would re-SUM the
+    * ([[deltaReplayed]] — a replayed append would re-SUM the
     * postings), a lower id fails loudly; the retract records the
     * separate `last_retract` watermark. */
   def bm25IndexAppend(batch: DataFrame, idCol: String, textCol: String,
@@ -2936,25 +2914,9 @@ object GraftOps {
 
   private def bm25Delta(batch: DataFrame, idCol: String, textCol: String,
       indexDir: String, op: String, negate: Boolean,
-      batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    if (batchId.isDefined) {
-      // replay fast path BEFORE the commit AND before the emptiness
-      // shortcut ([[packIndexAppend]]'s documented ordering — a
-      // below-watermark wiring bug fails loudly even on an empty
-      // trigger): a replayed delta would re-sum its postings (silent
-      // until a compact contract check fires); the authoritative gate
-      // re-runs inside the callback
-      val snap = indexSnapshot(spark, indexDir, "BM25", "bm25IndexBuild")
-      val replayed = if (negate) retractReplayed(snap, batchId, op)
-        else appendReplayed(snap, batchId, op)
-      if (replayed) return
-    }
-    if (batch.isEmpty) return
-    swallowReplay(IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"$op: no index at $indexDir — build one with bm25IndexBuild first"))
-      skipIfReplayed(base, batchId, op, negate)
+      batchId: Option[Long] = None): Unit =
+    deltaCommit(batch.sparkSession, indexDir, op, "BM25", "bm25IndexBuild",
+        batchId, negate, batch.isEmpty) { (base, v) =>
       requireBm25Sidecar(base, indexDir, op)
       val pinned = writeBucketedOrEmpty(
         bm25Postings(requireUniqueIds(batch, idCol, op), idCol, textCol,
@@ -2965,25 +2927,18 @@ object GraftOps {
           .coalesce(1).write.parquet(s"$indexDir/$v/stats"),
         () => bm25DocsSidecar(pinned)
           .coalesce(1).write.parquet(s"$indexDir/$v/docs"))
-      (base.tables
-        + ("postings" -> (base.tables("postings") :+ v))
-        + ("stats" -> (base.tables("stats") :+ v))
-        + ("docs" -> (base.tables("docs") :+ v)),
-        base.props ++ batchProps(batchId, base.version, negate))
-    })
-    ()
-  }
+      Bm25Tables
+    }
 
   /** Fold a BM25 index's segment chain into one: sum (tf, dl) per
     * (term, did), drop net-nonpositive postings (retracted documents
     * leave the physical index here), fold the stats deltas to one row,
-    * rewrite bucketed. */
+    * rewrite bucketed ([[compactCommit]]). */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commitWithRetry(spark, indexDir, "bm25IndexCompact") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"bm25IndexCompact: no index at $indexDir"))
+      indexDir: String): Unit =
+    compactCommit(spark, indexDir, "bm25IndexCompact", "BM25",
+        "bm25IndexBuild") {
+      (base, v) =>
         // bucket is a pure function of term — any per-group representative
         // (max) reproduces it without re-hashing. Two BEST-EFFORT checks
         // on the append contract (live doc ids unique across appends):
@@ -3059,10 +3014,8 @@ object GraftOps {
             .otherwise(col("cnt")))
           .select(col("did"), col("dg"), col("cnt").cast("int").as("cnt"))
           .coalesce(1).write.parquet(s"$indexDir/$v/docs")
-        (Bm25Tables.map(_ -> Seq(v)).toMap, base.props)
+        Bm25Tables
     }
-    ()
-  }
 
   /** BM25 retrieval against a persisted [[bm25IndexBuild]] index —
     * [[bm25TopK]] WITHOUT re-reading the corpus: the probe touches only
@@ -3792,35 +3745,16 @@ object GraftOps {
     * snapshot first reads a complete consistent corpus, and a second
     * concurrent writer fails loudly at the claim. `batchId` (optional)
     * is the foreachBatch replay watermark every batch-driven store
-    * shares: a re-delivered id is a NO-OP ([[appendReplayed]] — the
-    * vectors are already indexed), a lower id fails loudly. */
+    * shares: a re-delivered id is a NO-OP ([[deltaReplayed]] — the
+    * vectors are already indexed), a lower id fails loudly. An empty
+    * batch is a no-op: a zero-row partitionBy write emits no part
+    * files, and a manifest recording that fileless segment would fail
+    * every later read of the index. */
   def ivfAppend(emb: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, batchId: Option[Long] = None): Unit = {
-    val spark = emb.sparkSession
-    // replay fast path ([[appendReplayed]]): a replayed micro-batch's
-    // vectors are already in the index — a second segment would
-    // duplicate every id; the authoritative gate re-runs in-commit.
-    // Runs BEFORE the emptiness shortcut ([[packIndexAppend]]'s
-    // documented ordering): a below-watermark batch id — the
-    // two-writers wiring bug this gate exists to surface — must fail
-    // loudly even on an empty trigger, not appear to succeed until its
-    // first non-empty batch
-    if (batchId.isDefined && appendReplayed(
-        indexSnapshot(spark, indexDir, "IVF", "ivfBuild"), batchId,
-        "ivfAppend")) return
-    // empty batches are routine in a micro-batched ingest and must be a
-    // NO-OP: a zero-row partitionBy write emits no part files, and a
-    // manifest recording that fileless segment would fail every later
-    // read of the index ("unable to infer schema")
-    if (emb.isEmpty) return
-    // commitWithRetry, like the band appends: the callback derives only
-    // from the batch + its base snapshot, so losing a claim race to a
-    // compact recommits cleanly against the winner's snapshot
-    swallowReplay(IndexStore.commitWithRetry(spark, indexDir, "ivfAppend") { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"no IVF index at $indexDir — build one with ivfBuild first"))
-      skipIfReplayed(base, batchId, "ivfAppend", negate = false)
-      val centers = readCentroidsSnap(spark, indexDir, base)
+      indexDir: String, batchId: Option[Long] = None): Unit =
+    deltaCommit(emb.sparkSession, indexDir, "ivfAppend", "IVF", "ivfBuild",
+        batchId, negate = false, emb.isEmpty) { (base, v) =>
+      val centers = readCentroidsSnap(emb.sparkSession, indexDir, base)
       requireIndexDim(withNorm(emb, idCol, vecCol), centers(0).length,
           "ivfAppend")
         .withColumn("bucket", nearestList(centers))
@@ -3828,11 +3762,8 @@ object GraftOps {
           col("nrm").as("cnrm"), col("bucket"))
         .transform(bucketExchange)
         .write.partitionBy("bucket").parquet(s"$indexDir/$v/corpus")
-      (base.tables + ("corpus" -> (base.tables("corpus") :+ v)),
-        base.props ++ batchProps(batchId, base.version, negate = false))
-    })
-    ()
-  }
+      Seq("corpus")
+    }
 
   /** Loud width gate for persisted-index mutations/searches: graft_dot
     * truncates to the shorter operand, so a wrong-width batch would be
@@ -4373,17 +4304,8 @@ object GraftOps {
   def ivfPqAppend(emb: DataFrame, idCol: String, vecCol: String,
       indexDir: String, batchId: Option[Long] = None): Unit = {
     val spark = emb.sparkSession
-    // replay fast path ([[appendReplayed]], [[ivfAppend]]'s stance),
-    // BEFORE the emptiness shortcut so a below-watermark wiring bug
-    // fails loudly even on an empty trigger
-    if (batchId.isDefined && appendReplayed(
-        indexSnapshot(spark, indexDir, "IVF-PQ", "ivfPqBuild"), batchId,
-        "ivfPqAppend")) return
-    if (emb.isEmpty) return
-    swallowReplay(IndexStore.commitWithRetry(spark, indexDir, "ivfPqAppend") { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"no IVF-PQ index at $indexDir — build one with ivfPqBuild first"))
-      skipIfReplayed(base, batchId, "ivfPqAppend", negate = false)
+    deltaCommit(spark, indexDir, "ivfPqAppend", "IVF-PQ", "ivfPqBuild",
+        batchId, negate = false, emb.isEmpty) { (base, v) =>
       val (m, ksub, dim) = ivfPqLayout(base)
       val centers = readCentroidsSnap(spark, indexDir, base)
       val codebooks = readCodebooksSnap(spark, indexDir, base, m, ksub)
@@ -4391,10 +4313,8 @@ object GraftOps {
           requireIndexDim(withNorm(emb, idCol, vecCol), dim, "ivfPqAppend"),
           centers, codebooks, dim / m)
         .write.partitionBy("bucket").parquet(s"$indexDir/$v/corpus")
-      (base.tables + ("corpus" -> (base.tables("corpus") :+ v)),
-        base.props ++ batchProps(batchId, base.version, negate = false))
-    })
-    ()
+      Seq("corpus")
+    }
   }
 
   /** RETRACT vectors (by id) from an [[ivfPqBuild]] index —
@@ -4407,24 +4327,18 @@ object GraftOps {
       "IVF-PQ", "ivfPqBuild", "vid", batchId)
 
   /** [[ivfCompact]]'s PQ twin: folds the dual-view corpus segment
-    * chain back to one file per inverted list, drops tombstones, and
-    * republishes the bounded centroid and codebook tables unchanged. */
+    * chain back to one file per inverted list and drops tombstones;
+    * the frozen centroid and codebook tables carry forward unchanged
+    * ([[compactCommit]]). */
   def ivfPqCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commit(spark, indexDir, "ivfPqCompact") { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"no IVF-PQ index at $indexDir — build one with ivfPqBuild first"))
-      Seq("centroids", "codebooks").foreach { t =>
-        IndexStore.readTable(spark, indexDir, base, t)
-          .coalesce(1).write.parquet(s"$indexDir/$v/$t")
-      }
-      liveIndexTable(spark, indexDir, base, "corpus", "vid")
-        .transform(bucketExchange)
-        .write.partitionBy("bucket").parquet(s"$indexDir/$v/corpus")
-      (IvfPqTables.map(_ -> Seq(v)).toMap, base.props)
+      indexDir: String): Unit =
+    compactCommit(spark, indexDir, "ivfPqCompact", "IVF-PQ", "ivfPqBuild") {
+      (base, v) =>
+        liveIndexTable(spark, indexDir, base, "corpus", "vid")
+          .transform(bucketExchange)
+          .write.partitionBy("bucket").parquet(s"$indexDir/$v/corpus")
+        Seq("corpus")
     }
-    ()
-  }
 
   /** Search a persistent [[ivfPqBuild]] index — asymmetric distance
     * computation (ADC) + exact rerank:
@@ -4785,8 +4699,8 @@ object GraftOps {
     * one-shot clustering over all edges ever seen.
     *
     * The root resolution and merge computation run INSIDE the
-    * [[IndexStore.commitWithRetry]] closure, derived from the
-    * closure's base snapshot: a loser to a concurrent append recomputes
+    * [[deltaCommit]] closure, derived from the closure's base
+    * snapshot: a loser to a concurrent append recomputes
     * its unions against the winner's published forest — writing roots
     * resolved against a stale snapshot could re-parent a node BOTH
     * writers touched and silently split the winner's merge (the lost
@@ -4799,18 +4713,11 @@ object GraftOps {
   def clusterIndexAppend(edges: DataFrame, srcCol: String, dstCol: String,
       indexDir: String, batchId: Option[Long] = None): Unit = {
     val spark = edges.sparkSession
-    val snap = indexSnapshot(spark, indexDir, "cluster", "clusterIndexBuild")
-    if (replayBase(spark, indexDir, snap, batchId,
-        "clusterIndexAppend").isDefined)
-      return // the batch's unions are already in the forest
     val e = clusterEdgeGuard(edges, srcCol, dstCol, "clusterIndexAppend")
       .localCheckpoint(false)
-    if (e.isEmpty) return
-    IndexStore.commitWithRetry(spark, indexDir, "clusterIndexAppend") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"clusterIndexAppend: no cluster index at $indexDir — build " +
-            "one with clusterIndexBuild first"))
+    deltaCommit(spark, indexDir, "clusterIndexAppend", "cluster",
+        "clusterIndexBuild", batchId, negate = false, e.isEmpty) {
+      (base, v) =>
         // nBuckets comes from the CLOSURE's base snapshot, like the
         // roots: a retry against a concurrently REBUILT index (new
         // layout) must bucket its rows under the winner's layout, or
@@ -4841,14 +4748,8 @@ object GraftOps {
           () => { writeBucketedOrEmpty(
             e.withColumn("bucket", clusterBucket(col("a"), nBuckets)),
             s"$indexDir/$v/edges"); () })
-        (base.tables + ("parents" -> (base.tables("parents") :+ v)) +
-          ("edges" -> (base.tables.getOrElse("edges", Nil) :+ v)),
-          base.props ++ batchId.map(b => Map(
-            "last_batch" -> b.toString,
-            "last_batch_base" -> base.version.toString))
-            .getOrElse(Map.empty))
+        ClusterTables
     }
-    ()
   }
 
   /** Retract nodes from a [[clusterIndexBuild]] index — the erasure
@@ -4884,40 +4785,23 @@ object GraftOps {
     * watermark exactly as in [[digestIndexRetract]]. */
   def clusterRetract(removed: DataFrame, idCol: String, indexDir: String,
       batchId: Option[Long] = None): Unit = {
-    val spark = removed.sparkSession
-    val snap = indexSnapshot(spark, indexDir, "cluster", "clusterIndexBuild")
-    if (retractReplayed(snap, batchId, "clusterRetract")) return
     val ids = removed.select(
         when(col(idCol).isNull, raise_error(lit(
           "clusterRetract: null node id — a null names nothing to forget " +
             "and hides a wiring bug")))
           .otherwise(col(idCol)).as("node"))
       .distinct().localCheckpoint(false)
-    if (ids.isEmpty) return
-    swallowReplay(
-      IndexStore.commitWithRetry(spark, indexDir, "clusterRetract") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"clusterRetract: no cluster index at $indexDir — build one " +
-            "with clusterIndexBuild first"))
-        // in-commit replay gate ([[skipIfReplayed]], the digest
-        // retract's stance): a zombie-writer race past the outer check
-        // would commit duplicate tombstones at a later sequence
-        // version, killing nodes legitimately revived by an edge batch
-        // appended between the two attempts
-        skipIfReplayed(base, batchId, "clusterRetract", negate = true)
+    deltaCommit(removed.sparkSession, indexDir, "clusterRetract", "cluster",
+        "clusterIndexBuild", batchId, negate = true, ids.isEmpty) {
+      (base, v) =>
         // layout from the CLOSURE's base snapshot (the retry rule every
         // cluster-index mutation follows)
         val nBuckets = base.prop("n_buckets").toInt
         writeBucketedOrEmpty(
           ids.withColumn("bucket", clusterBucket(col("node"), nBuckets)),
           s"$indexDir/$v/tombstones")
-        (base.tables + ("tombstones" ->
-            (base.tables.getOrElse("tombstones", Nil) :+ v)),
-          base.props ++ batchId.map(b => Map("last_retract" -> b.toString))
-            .getOrElse(Map.empty))
-    })
-    ()
+        Seq("tombstones")
+    }
   }
 
   /** The ACTIVELY-retracted node set of a cluster-index snapshot:
@@ -5108,16 +4992,14 @@ object GraftOps {
     * With no tombstones the old flatten-only plan (plus the edge fold)
     * runs. Tombstones drop from the manifest; post-compact reads pay
     * zero retraction overhead and [[indexVacuum]] reclaims the
-    * retracted bytes. Same [[IndexStore]] contract as every compact:
+    * retracted bytes. Same [[compactCommit]] contract as every compact:
     * atomic publish, snapshot-isolated readers, props (including both
     * replay watermarks) carried forward. */
   def clusterIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commit(spark, indexDir, "clusterIndexCompact") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"no cluster index at $indexDir — build one with " +
-            "clusterIndexBuild first"))
+      indexDir: String): Unit =
+    compactCommit(spark, indexDir, "clusterIndexCompact", "cluster",
+        "clusterIndexBuild") {
+      (base, v) =>
         val nBuckets = base.prop("n_buckets").toInt
         val resolved = clusterResolveSnap(spark, indexDir, base)
           .localCheckpoint(false)
@@ -5181,10 +5063,8 @@ object GraftOps {
             edgesNew.withColumn("bucket",
               clusterBucket(col("a"), nBuckets)),
             s"$indexDir/$v/edges"); () })
-        (ClusterTables.map(_ -> Seq(v)).toMap, base.props)
+        ClusterTables
     }
-    ()
-  }
 
   /** Symmetric per-vector int8 scalar quantization of an embedding column —
     * the storage/bandwidth half of a scale ANN story: 8-bit codes are 4×
@@ -5869,9 +5749,8 @@ object GraftOps {
         swallowReplay(
           IndexStore.commitWithRetry(spark, indexDir, "packIndexAppend") {
           (baseOpt, v) =>
-            val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-              s"packIndexAppend: no pack index at $indexDir — build one " +
-                "with packIndexBuild first"))
+            val base = baseOpt.getOrElse(
+              noIndex(spark, indexDir, "pack", "packIndexBuild"))
             // in-commit replay gate ([[skipIfReplayed]]'s zombie-writer
             // stance, in pack's time-travel form): the outer replayBase
             // check alone has the two-drivers hole — both pass it, the
@@ -5893,10 +5772,7 @@ object GraftOps {
               .toDF("shard", "next_off")
               .coalesce(1).write.parquet(s"$indexDir/$v/offsets")
             (base.tables + ("offsets" -> Seq(v)),
-              base.props ++ batchId.map(b => Map(
-                "last_batch" -> b.toString,
-                "last_batch_base" -> base.version.toString))
-                .getOrElse(Map.empty))
+              base.props ++ batchProps(batchId, base.version, negate = false))
         })
         lostReplay match {
           case Some(p) => rebased(offsetsOf(p)).localCheckpoint(true)
@@ -6278,12 +6154,9 @@ object GraftOps {
       textCol: String, indexDir: String, side: String, op: String,
       negate: Boolean, batchId: Option[Long] = None): Unit = {
     val table = sideTable(side, op)
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"$op: no index at $indexDir — build one with dsirStatsBuild " +
-          "first"))
+    deltaCommit(spark, indexDir, op, "dsir-stats", "dsirStatsBuild", batchId,
+        negate, batch.isEmpty) { (base, v) =>
       val pinned = writeBucketedOrEmpty(dsirCountDelta(batch, idCol,
         textCol, base.prop("n").toInt, base.prop("n_buckets").toInt,
         dsirFeatureBuckets(base), op, negate),
@@ -6295,25 +6168,18 @@ object GraftOps {
       dsirTotalsDelta(spark,
         if (side == "raw") dN else 0L, if (side == "raw") 0L else dN)
         .coalesce(1).write.parquet(s"$indexDir/$v/totals")
-      (base.tables
-        + (table -> (base.tables(table) :+ v))
-        + ("totals" -> (base.tables("totals") :+ v)),
-        base.props ++ batchId.map(b => Map(
-          "last_batch" -> b.toString,
-          "last_batch_base" -> base.version.toString))
-          .getOrElse(Map.empty))
+      Seq(table, "totals")
     }
-    ()
   }
 
   /** Fold a DSIR-stats store's segment chains: sum counts per feature
-    * key, drop net-nonpositive rows on both sides, rewrite bucketed. */
+    * key, drop net-nonpositive rows on both sides, rewrite bucketed
+    * ([[compactCommit]]). */
   def dsirStatsCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commitWithRetry(spark, indexDir, "dsirStatsCompact") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"dsirStatsCompact: no index at $indexDir"))
+      indexDir: String): Unit =
+    compactCommit(spark, indexDir, "dsirStatsCompact", "dsir-stats",
+        "dsirStatsBuild") {
+      (base, v) =>
         Seq("raw_counts", "tgt_counts").foreach { t =>
           writeBucketedOrEmpty(
             IndexStore.readTable(spark, indexDir, base, t)
@@ -6326,10 +6192,8 @@ object GraftOps {
         IndexStore.readTable(spark, indexDir, base, "totals")
           .groupBy("side").agg(coalesce(sum("cnt"), lit(0L)).as("cnt"))
           .coalesce(1).write.parquet(s"$indexDir/$v/totals")
-        (DsirTables.map(_ -> Seq(v)).toMap, base.props)
+        DsirTables
     }
-    ()
-  }
 
   /** Score an arriving batch against a [[dsirStatsBuild]] store WITHOUT
     * re-reading the pool: the batch's own feature counts ADD to the
@@ -6645,11 +6509,9 @@ object GraftOps {
   private def lmStatsDelta(batch: DataFrame, textCol: String,
       indexDir: String, op: String, negate: Boolean,
       batchId: Option[Long]): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"$op: no index at $indexDir — build one with lmStatsBuild first"))
+    deltaCommit(spark, indexDir, op, "LM-stats", "lmStatsBuild", batchId,
+        negate, batch.isEmpty) { (base, v) =>
       val nBuckets = base.prop("n_buckets").toInt
       inParallel(
         () => {
@@ -6662,26 +6524,17 @@ object GraftOps {
         () => { writeBucketedOrEmpty(
           lmBigDelta(batch, textCol, nBuckets, op, negate),
           s"$indexDir/$v/big_counts"); () })
-      (base.tables
-        + ("uni_counts" -> (base.tables("uni_counts") :+ v))
-        + ("big_counts" -> (base.tables("big_counts") :+ v))
-        + ("totals" -> (base.tables("totals") :+ v)),
-        base.props ++ batchId.map(b => Map(
-          "last_batch" -> b.toString,
-          "last_batch_base" -> base.version.toString))
-          .getOrElse(Map.empty))
+      LmTables
     }
-    ()
   }
 
   /** Fold an LM-stats store's segment chains: sum counts per key, drop
-    * net-nonpositive rows, rewrite bucketed. */
+    * net-nonpositive rows, rewrite bucketed ([[compactCommit]]). */
   def lmStatsCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commitWithRetry(spark, indexDir, "lmStatsCompact") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"lmStatsCompact: no index at $indexDir"))
+      indexDir: String): Unit =
+    compactCommit(spark, indexDir, "lmStatsCompact", "LM-stats",
+        "lmStatsBuild") {
+      (base, v) =>
         val pinnedUni = writeBucketedOrEmpty(
           IndexStore.readTable(spark, indexDir, base, "uni_counts")
             .groupBy("w").agg(sum("cnt").as("cnt"),
@@ -6700,10 +6553,8 @@ object GraftOps {
         // live, so later probes start here and correct forward only
         lmTotalsDelta(spark, pinnedUni, foldBoundary = true)
           .coalesce(1).write.parquet(s"$indexDir/$v/totals")
-        (LmTables.map(_ -> Seq(v)).toMap, base.props)
+        LmTables
     }
-    ()
-  }
 
   /** [[lmPerplexity]] against a persisted [[lmStatsBuild]] store — the
     * CCNet gate WITHOUT re-reading the reference: the batch's events

@@ -72,7 +72,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * if any, is cleared automatically by the next successful claim of
   * that version). Version numbers form an unbroken chain; every
   * commit derives from its immediate predecessor — no lost updates by
-  * construction. */
+  * construction.
+  *
+  * Index lifecycle: builds (and the profile store, and
+  * [[GraftOps.packIndexAppend]], whose replay re-derives offsets from
+  * a past snapshot) call [[commit]] directly. Every other mutation
+  * goes through one of two bodies, both on [[commitWithRetry]]:
+  * [[GraftOps.deltaCommit]] (append/retract: replay gate, empty-batch
+  * no-op, each written table gains the new segment, watermark props)
+  * and [[GraftOps.compactCommit]] (each rewritten table becomes the
+  * single new segment; every other table is carried forward
+  * unchanged, except `tombstones`, which the compact folds and drops;
+  * props carry forward). */
 private[graft] object IndexStore {
 
   /** One committed snapshot of the index at `dir`: manifest version,

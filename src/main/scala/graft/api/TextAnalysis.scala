@@ -779,36 +779,15 @@ object TextAnalysis {
 
   private def clfStoreDelta(batch: DataFrame, idCol: String,
       textCol: String, labelCol: String, indexDir: String, op: String,
-      negate: Boolean, batchId: Option[Long]): Unit = {
-    val spark = batch.sparkSession
-    // replay fast path (GraftOps.appendReplayed / retractReplayed via
-    // skipIfReplayed — the plain-delta replay story every batch-driven
-    // store now shares): a replayed append would double the doc's
-    // feature rows, a replayed retract would negate them twice — both
-    // the exact net-bias corruption the fold-time check exists to
-    // catch. The authoritative gate re-runs inside the commit. Runs
-    // BEFORE the emptiness shortcut (packIndexAppend's documented
-    // ordering) so a below-watermark wiring bug fails loudly even on
-    // an empty trigger.
-    if (batchId.isDefined) {
-      val snap = GraftOps.indexSnapshot(spark, indexDir,
-        "classifier feature", "clfStoreBuild")
-      if (GraftOps.deltaReplayed(snap, batchId, op, negate)) return
-    }
-    if (batch.isEmpty) return
-    GraftOps.swallowReplay(IndexStore.commitWithRetry(spark, indexDir, op) {
-      (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"$op: no index at $indexDir — build one with clfStoreBuild first"))
-      GraftOps.skipIfReplayed(base, batchId, op, negate)
+      negate: Boolean, batchId: Option[Long]): Unit =
+    GraftOps.deltaCommit(batch.sparkSession, indexDir, op,
+        "classifier feature", "clfStoreBuild", batchId, negate,
+        batch.isEmpty) { (base, v) =>
       clfFeatsSigned(batch, idCol, textCol, labelCol,
           base.prop("num_features").toInt, op, negate)
         .write.parquet(s"$indexDir/$v/feats")
-      (base.tables + ("feats" -> (base.tables("feats") :+ v)),
-        base.props ++ GraftOps.batchProps(batchId, base.version, negate))
-    })
-    ()
-  }
+      ClfTables
+    }
 
   /** Fold a classifier store's segment chain: sum x per (did, y,
     * bucket), drop net-zero rows (a retracted document cancels
@@ -820,20 +799,17 @@ object TextAnalysis {
     * whose text/label did not match its append — both fail loudly
     * rather than silently corrupting every later retrain. In-batch
     * duplicates cannot reach the store at all: the delta paths reject
-    * them at the write ([[GraftOps.requireUniqueIds]]). */
+    * them at the write ([[GraftOps.requireUniqueIds]]). Committed
+    * through [[GraftOps.compactCommit]]. */
   def clfStoreCompact(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexStore.commitWithRetry(spark, indexDir, "clfStoreCompact") {
-      (baseOpt, v) =>
-        val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-          s"clfStoreCompact: no index at $indexDir"))
-        val folded = foldedLiveFeats(spark, indexDir, base,
-          "clfStoreCompact")
-        writePlainOrEmpty(folded, s"$indexDir/$v/feats")
-        (ClfTables.map(_ -> Seq(v)).toMap, base.props)
+      indexDir: String): Unit =
+    GraftOps.compactCommit(spark, indexDir, "clfStoreCompact",
+        "classifier feature", "clfStoreBuild") { (base, v) =>
+      writePlainOrEmpty(
+        foldedLiveFeats(spark, indexDir, base, "clfStoreCompact"),
+        s"$indexDir/$v/feats")
+      ClfTables
     }
-    ()
-  }
 
   /** A classifier store's live feature table, folded per (did, y,
     * bucket) with net-zero rows dropped, WITH the net-bias == 1
@@ -1536,18 +1512,9 @@ object TextAnalysis {
       "vocabStoreAppendTokens: null or empty token")
     require(tokens.distinct.size == tokens.size,
       "vocabStoreAppendTokens: duplicate token in batch")
-    // replay fast path BEFORE any work (packIndexAppend's documented
-    // ordering — a below-watermark wiring bug fails loudly here)
-    if (batchId.isDefined && GraftOps.appendReplayed(
-        GraftOps.indexSnapshot(spark, indexDir, "vocab",
-          "vocabStoreBuild"), batchId, "vocabStoreAppendTokens")) return
-    GraftOps.swallowReplay(IndexStore.commitWithRetry(spark, indexDir,
-      "vocabStoreAppendTokens") { (baseOpt, v) =>
-      val base = baseOpt.getOrElse(throw new IllegalArgumentException(
-        s"vocabStoreAppendTokens: no vocab store at $indexDir — build " +
-          "one with vocabStoreBuild first"))
-      GraftOps.skipIfReplayed(base, batchId, "vocabStoreAppendTokens",
-        negate = false)
+    GraftOps.deltaCommit(spark, indexDir, "vocabStoreAppendTokens",
+        "vocab", "vocabStoreBuild", batchId, negate = false,
+        isEmpty = false) { (base, v) =>
       // collision check against the CLAIM-resolved base (two writers
       // adding the same special: the loser sees the winner's segment)
       val live = IndexStore.readTable(spark, indexDir, base, "vocab")
@@ -1561,11 +1528,8 @@ object TextAnalysis {
       tokens.zipWithIndex.map { case (t, i) => (maxId + 1 + i, t) }
         .toDF("id", "token")
         .coalesce(1).write.parquet(s"$indexDir/$v/vocab")
-      (base.tables + ("vocab" -> (base.tables("vocab") :+ v)),
-        base.props ++ GraftOps.batchProps(batchId, base.version,
-          negate = false))
-    })
-    ()
+      Seq("vocab")
+    }
   }
 
   /** Tokenize a batch AGAINST a persisted vocab store — the serving

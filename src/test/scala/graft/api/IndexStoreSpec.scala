@@ -12,7 +12,12 @@ import graft.engine.SparkTestBase
   *    the profile store, and no read of a committed table runs a job;
   *  - every family records its layout as manifest props, whose values
   *    round-trip any string, and a missing prop fails loudly;
-  *  - a batch sketch takes its shape from the snapshot it probes;
+  *  - a compact rewrites only the tables it folds: frozen tables keep
+  *    the build's segment and tombstones leave the manifest;
+  *  - every append, retract and compact against a dir holding no index
+  *    fails with one message naming the builder;
+  *  - a batch sketch takes its shape from the snapshot it probes, and
+  *    appending it after a rebuild to another shape fails loudly;
   *  - the metadata memos cannot serve a deleted-and-rebuilt index;
   *  - a repeat hybrid query costs the same however many segments the
   *    indexes have accreted. */
@@ -150,41 +155,54 @@ class IndexStoreSpec extends SparkTestBase {
         ("gram", Seq(
           d => GraftOps.gramIndexBuild(docs, "text", d, k = 3, nBuckets = 5),
           d => GraftOps.gramIndexAppend(more, "text", d),
+          d => GraftOps.gramIndexRetract(more, "text", d),
           d => GraftOps.gramIndexCompact(s, d)),
           Map("k" -> "3", "n_buckets" -> "5")),
         ("fingerprint", Seq(
           d => GraftOps.fingerprintBuild(docs, "doc_id", "text", d,
             nHashes = 16, bands = 4),
           d => GraftOps.fingerprintAppend(more, "doc_id", "text", d),
+          d => GraftOps.fingerprintRetract(docs.limit(2), "doc_id", d),
           d => GraftOps.fingerprintCompact(s, d)),
           Map("n_hashes" -> "16", "bands" -> "4")),
         ("srp", Seq(
           d => GraftOps.srpIndexBuild(emb, "vec_id", "embedding", d, dim = 4,
             nBits = 16, bands = 4, seed = 7L),
           d => GraftOps.srpIndexAppend(embMore, "vec_id", "embedding", d),
+          d => GraftOps.srpIndexRetract(emb.limit(2), "vec_id", d),
           d => GraftOps.srpIndexCompact(s, d)),
           Map("dim" -> "4", "n_bits" -> "16", "bands" -> "4", "seed" -> "7")),
         ("digest", Seq(
           d => GraftOps.digestIndexBuild(docs, "text", d, nBuckets = 5),
           d => GraftOps.digestIndexAppend(more, "text", d),
+          d => GraftOps.digestIndexRetract(docs.limit(2), "text", d),
           d => GraftOps.digestIndexCompact(s, d)),
           Map("n_buckets" -> "5")),
         ("digest+bloom", Seq(
           d => GraftOps.digestIndexBuild(docs, "text", d, nBuckets = 5,
             bloomFpp = Some(0.05)),
           d => GraftOps.digestIndexAppend(more, "text", d),
+          d => GraftOps.digestIndexRetract(docs.limit(2), "text", d),
           d => GraftOps.digestIndexCompact(s, d)),
           Map("n_buckets" -> "5", "bloom_fpp" -> "0.05")),
         ("bm25", Seq(
           d => GraftOps.bm25IndexBuild(docs, "doc_id", "text", d,
             nBuckets = 5),
           d => GraftOps.bm25IndexAppend(more, "doc_id", "text", d),
+          d => GraftOps.bm25IndexRetract(more, "doc_id", "text", d),
           d => GraftOps.bm25IndexCompact(s, d)),
           Map("n_buckets" -> "5")),
+        ("ivf", Seq(
+          d => GraftOps.ivfBuild(emb, "vec_id", "embedding", d, nLists = 2),
+          d => GraftOps.ivfAppend(embMore, "vec_id", "embedding", d),
+          d => GraftOps.ivfRetract(emb.limit(2), "vec_id", d),
+          d => GraftOps.ivfCompact(s, d)),
+          Map.empty[String, String]),
         ("ivfPq", Seq(
           d => GraftOps.ivfPqBuild(emb, "vec_id", "embedding", d, nLists = 2,
             m = 2, ksub = 4),
           d => GraftOps.ivfPqAppend(embMore, "vec_id", "embedding", d),
+          d => GraftOps.ivfPqRetract(emb.limit(2), "vec_id", d),
           d => GraftOps.ivfPqCompact(s, d)),
           Map("m" -> "2", "ksub" -> "4", "dim" -> "4", "enc" -> "residual-v1")),
         ("cluster", Seq(
@@ -193,6 +211,8 @@ class IndexStoreSpec extends SparkTestBase {
             nBuckets = 5),
           d => GraftOps.clusterIndexAppend(Seq((3L, 4L)).toDF("x", "y"),
             "x", "y", d),
+          d => GraftOps.clusterRetract(Seq(Tuple1(3L)).toDF("node"), "node",
+            d),
           d => GraftOps.clusterIndexCompact(s, d)),
           Map("n_buckets" -> "5")),
         ("pack", Seq(
@@ -206,17 +226,21 @@ class IndexStoreSpec extends SparkTestBase {
           d => GraftOps.dsirStatsBuild(docs, "doc_id", "text", more, "text",
             d, n = 1, featureBuckets = Some(32), nBuckets = 5),
           d => GraftOps.dsirStatsAppend(more, "doc_id", "text", d),
+          d => GraftOps.dsirStatsRetract(more, "doc_id", "text", d),
           d => GraftOps.dsirStatsCompact(s, d)),
           Map("n" -> "1", "n_buckets" -> "5", "feature_buckets" -> "32")),
         ("lm", Seq(
           d => GraftOps.lmStatsBuild(docs, "text", d, n = 1, nBuckets = 5),
           d => GraftOps.lmStatsAppend(more, "text", d),
+          d => GraftOps.lmStatsRetract(more, "text", d),
           d => GraftOps.lmStatsCompact(s, d)),
           Map("n" -> "1", "n_buckets" -> "5")),
         ("classifier", Seq(
           d => TextAnalysis.clfStoreBuild(labeled, "doc_id", "text", "label",
             d, numFeatures = 16),
           d => TextAnalysis.clfStoreAppend(labeledMore, "doc_id", "text",
+            "label", d),
+          d => TextAnalysis.clfStoreRetract(labeledMore, "doc_id", "text",
             "label", d),
           d => TextAnalysis.clfStoreCompact(s, d)),
           Map("num_features" -> "16")),
@@ -238,6 +262,91 @@ class IndexStoreSpec extends SparkTestBase {
       }
       assert(!new java.io.File(dir).listFiles().exists(v =>
         new java.io.File(v, "meta").exists), s"$name wrote a meta dir")
+      // the compact (the last step where a family has one) rewrites only
+      // what it folds: frozen tables keep the build's segment, and the
+      // folded tombstones leave the manifest
+      val last = snaps.last
+      assert(!last.tables.contains("tombstones"),
+        s"$name v${last.version} still lists tombstones")
+      Seq("centroids", "codebooks").filter(last.tables.contains).foreach { t =>
+        assert(last.tables(t) === Seq("v00001"),
+          s"$name: the compact rewrote the frozen $t table")
+      }
+    }
+  }
+
+  test("every family's append, retract and compact against a dir holding " +
+    "no index fails with one message naming the builder") {
+    val s = spark
+    import s.implicits._
+    graft.GraftExtensions.register(s)
+    val docs = words(1, 4).toDF("doc_id", "text")
+    val labeled = docs.withColumn("label", (col("doc_id") % 2).cast("int"))
+    val emb = vectors(1, 4).toDF("vec_id", "embedding")
+    val nodes = Seq(Tuple1(1L)).toDF("node")
+    // (what, builder, every mutation of the family)
+    val families: Seq[(String, String, Seq[String => Unit])] = Seq(
+      ("gram", "gramIndexBuild", Seq(
+        d => GraftOps.gramIndexAppend(docs, "text", d),
+        d => GraftOps.gramIndexRetract(docs, "text", d),
+        d => GraftOps.gramIndexCompact(s, d))),
+      ("fingerprint", "fingerprintBuild", Seq(
+        d => GraftOps.fingerprintAppend(docs, "doc_id", "text", d),
+        d => GraftOps.fingerprintRetract(docs, "doc_id", d),
+        d => GraftOps.fingerprintCompact(s, d))),
+      ("SRP embedding", "srpIndexBuild", Seq(
+        d => GraftOps.srpIndexAppend(emb, "vec_id", "embedding", d),
+        d => GraftOps.srpIndexRetract(emb, "vec_id", d),
+        d => GraftOps.srpIndexCompact(s, d))),
+      ("digest", "digestIndexBuild", Seq(
+        d => GraftOps.digestIndexAppend(docs, "text", d),
+        d => GraftOps.digestIndexRetract(docs, "text", d),
+        d => GraftOps.digestIndexCompact(s, d))),
+      ("BM25", "bm25IndexBuild", Seq(
+        d => GraftOps.bm25IndexAppend(docs, "doc_id", "text", d),
+        d => GraftOps.bm25IndexRetract(docs, "doc_id", "text", d),
+        d => GraftOps.bm25IndexCompact(s, d))),
+      ("IVF", "ivfBuild", Seq(
+        d => GraftOps.ivfAppend(emb, "vec_id", "embedding", d),
+        d => GraftOps.ivfRetract(emb, "vec_id", d),
+        d => GraftOps.ivfCompact(s, d))),
+      ("IVF-PQ", "ivfPqBuild", Seq(
+        d => GraftOps.ivfPqAppend(emb, "vec_id", "embedding", d),
+        d => GraftOps.ivfPqRetract(emb, "vec_id", d),
+        d => GraftOps.ivfPqCompact(s, d))),
+      ("cluster", "clusterIndexBuild", Seq(
+        d => GraftOps.clusterIndexAppend(Seq((1L, 2L)).toDF("x", "y"), "x",
+          "y", d),
+        d => GraftOps.clusterRetract(nodes, "node", d),
+        d => GraftOps.clusterIndexCompact(s, d))),
+      ("pack", "packIndexBuild", Seq(
+        d => { GraftOps.packIndexAppend(Seq((1L, 3L)).toDF("id", "nt"), "id",
+          "nt", d); () })),
+      ("dsir-stats", "dsirStatsBuild", Seq(
+        d => GraftOps.dsirStatsAppend(docs, "doc_id", "text", d),
+        d => GraftOps.dsirStatsRetract(docs, "doc_id", "text", d),
+        d => GraftOps.dsirStatsCompact(s, d))),
+      ("LM-stats", "lmStatsBuild", Seq(
+        d => GraftOps.lmStatsAppend(docs, "text", d),
+        d => GraftOps.lmStatsRetract(docs, "text", d),
+        d => GraftOps.lmStatsCompact(s, d))),
+      ("classifier feature", "clfStoreBuild", Seq(
+        d => TextAnalysis.clfStoreAppend(labeled, "doc_id", "text", "label",
+          d),
+        d => TextAnalysis.clfStoreRetract(labeled, "doc_id", "text", "label",
+          d),
+        d => TextAnalysis.clfStoreCompact(s, d))),
+      ("vocab", "vocabStoreBuild", Seq(
+        d => TextAnalysis.vocabStoreAppendTokens(s, Seq("<unk>"), d))))
+    families.foreach { case (what, builder, ops) =>
+      ops.zipWithIndex.foreach { case (op, i) =>
+        val dir = scratch("graft_noindex_")
+        val e = intercept[IllegalArgumentException](op(dir))
+        assert(e.getMessage ===
+          s"no $what index at $dir — build one with $builder first",
+          s"$what mutation #$i")
+        assert(IndexStore.resolve(s, dir).isEmpty, s"$what #$i published")
+      }
     }
   }
 
@@ -328,6 +437,51 @@ class IndexStoreSpec extends SparkTestBase {
     assert(bandsOf(GraftOps.srpIndexSketch(vectors(6, 3)
       .toDF("vec_id", "embedding"), "vec_id", "embedding", sa, "pinSpec")) ===
       Set(4))
+  }
+
+  test("a batch sketched for one layout fails loudly when appended after " +
+    "a rebuild to another, and the rebuild stays the latest version") {
+    val s = spark
+    import s.implicits._
+    graft.GraftExtensions.register(s)
+    val docs = words(7, 12).toDF("doc_id", "text")
+    val batch = words(8, 4).toDF("doc_id", "text")
+    val fp = scratch("graft_shape_fp_")
+    GraftOps.fingerprintBuild(docs, "doc_id", "text", fp, nHashes = 16,
+      bands = 4)
+    val a = IndexStore.resolve(s, fp).get
+    val sk = GraftOps.indexSketch(batch, "doc_id", "text", a)
+    GraftOps.fingerprintBuild(docs, "doc_id", "text", fp, nHashes = 32,
+      bands = 8)
+    val rebuilt = IndexStore.resolve(s, fp).get
+    val e = intercept[IllegalStateException] {
+      GraftOps.fingerprintAppendSketch(sk, a, fp)
+    }
+    assert(e.getMessage.contains("(bands=4, n_hashes=16)") &&
+      e.getMessage.contains("(bands=8, n_hashes=32)") &&
+      e.getMessage.contains("re-run the step"), e.getMessage)
+    assert(IndexStore.resolve(s, fp).get.version === rebuilt.version)
+    // the claim was released: the same batch sketched for the rebuild
+    // appends
+    GraftOps.fingerprintAppendSketch(
+      GraftOps.indexSketch(batch, "doc_id", "text", rebuilt), rebuilt, fp)
+    assert(IndexStore.resolve(s, fp).get.version === rebuilt.version + 1)
+    val emb = vectors(7, 12).toDF("vec_id", "embedding")
+    val srp = scratch("graft_shape_srp_")
+    GraftOps.srpIndexBuild(emb, "vec_id", "embedding", srp, dim = 4,
+      nBits = 16, bands = 4)
+    val sa = IndexStore.resolve(s, srp).get
+    val ssk = GraftOps.srpIndexSketch(vectors(8, 3).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", sa, "shapeSpec")
+    GraftOps.srpIndexBuild(emb, "vec_id", "embedding", srp, dim = 4,
+      nBits = 32, bands = 8)
+    val sv = IndexStore.resolve(s, srp).get.version
+    val e2 = intercept[IllegalStateException] {
+      GraftOps.srpIndexAppendSketch(ssk, sa, srp)
+    }
+    assert(e2.getMessage.contains("n_bits=16") &&
+      e2.getMessage.contains("n_bits=32"), e2.getMessage)
+    assert(IndexStore.resolve(s, srp).get.version === sv)
   }
 
   test("the profile store records its bucket tables' shared schema once, " +
